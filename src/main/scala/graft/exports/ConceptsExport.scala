@@ -228,7 +228,7 @@ object ConceptsExport {
         .orderBy(col("is_set"), col("concept_id")).limit(n)
       case None => wide(t, cfg)
     }
-    val all0 = timed("withKeyMapping")(withKeyMapping(widened, cfg))
+    val all0 = withKeyMapping(widened, cfg)
     // withKeyMapping checkpoints when it remaps (its guard needs the
     // materialized rows); the None path returned the LIVE wide plan,
     // so the edge builder, the selEdges semi-join, the topo join and
@@ -236,7 +236,7 @@ object ConceptsExport {
     // 2–3 full executions per export in the q470 gate config (r16).
     // Checkpoint exactly once on whichever path lacks it.
     val all = if (cfg.conceptKeyMapping.isDefined) all0
-      else timed("wide materialize")(all0.localCheckpoint())
+      else all0.localCheckpoint()
     val e = edges(t, all, cfg)
     val selected = cfg.setName match {
       case None => all
@@ -247,18 +247,18 @@ object ConceptsExport {
         all.join(inTree.withColumnRenamed("node", cfg.key), Seq(cfg.key), "left_semi")
     }
     // materialize the (dictionary-sized) edge set ONCE: detectCycles
-    // and topoOrder each cache-fill AND fully re-compute this plan
-    // otherwise (findCycleNodes unpersists on exit), so both fixpoints
-    // were paying the JDBC-scan + join + distinct edge derivation per
-    // pass — measured 5–10 s each at q470 scale vs ~1.5 s over a
-    // materialized frame (GraphFixpointProbe)
+    // and topoOrder each collect it to the driver, so without the
+    // checkpoint the JDBC-scan + join + distinct edge derivation would
+    // run twice; with it the graph stage is two collects over one
+    // checkpoint. Driver memory for the graph stage is bounded by these
+    // edges, i.e. by the dictionary's set and answer links.
     val selEdges = e.join(
       selected.select(qcol(cfg.key).as("src")), Seq("src"), "left_semi")
       .localCheckpoint()
-    timed("detectCycles")(GraphOps.detectCycles(selEdges))
+    GraphOps.detectCycles(selEdges)
     // O4: depth-sort puts every referent before its referrers; ties
     // stay in the reference's initial order (is_set asc, concept_id).
-    timed("topoOrder")(GraphOps.topoOrder(selected, cfg.key, selEdges))
+    GraphOps.topoOrder(selected, cfg.key, selEdges)
       .withColumn("__tie", struct(col("is_set"), col("concept_id")))
   }
 
@@ -275,21 +275,9 @@ object ConceptsExport {
     leading ++ rest
   }
 
-  /** stderr stage timing, on when GRAFT_EXPORT_TIMING is set — used to
-    * attribute the q470/stage:omrs_jdbc cost between pipeline stages. */
-  private def timed[A](what: String)(body: => A): A =
-    if (!sys.env.contains("GRAFT_EXPORT_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[export] $what%s took ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** Run the export end-to-end and write the single ordered CSV. */
   def export(t: String => DataFrame, cfg: ConceptsConfig, outPath: String): Unit = {
-    val rows = timed("pipeline")(pipeline(t, cfg))
-    timed("writeOrdered")(writeOrdered(rows, cfg, outPath))
+    writeOrdered(pipeline(t, cfg), cfg, outPath)
   }
 
   /** Dynamic-schema CSV write of (possibly exclude-filtered) pipeline

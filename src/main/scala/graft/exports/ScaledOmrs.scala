@@ -178,7 +178,7 @@ object ScaledOmrs {
   private val dbStage = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), JdbcConfig]
   private def derbyDb(s: SparkSession, dir: String, n: Long): JdbcConfig =
-    dbStage.getOrElseUpdate((s, dir), timed(s"derby ingest n=$n") {
+    dbStage.getOrElseUpdate((s, dir), {
       // full-string md5, not abs(hashCode): hashCode collides across
       // dirs (and abs(Int.MinValue) is negative) — r15 advisor
       val dbName = "omrs" + java.security.MessageDigest.getInstance("MD5")
@@ -209,20 +209,6 @@ object ScaledOmrs {
       } finally conn.close()
     })
 
-  /** stderr stage-split instrumentation (attribution inside the
-    * stage:omrs_jdbc / q470 rows — ingest vs export legs). Gated on
-    * GRAFT_EXPORT_TIMING like ConceptsExport.timed (r16 advisor: the
-    * unconditional print was instrumentation noise in every
-    * bench/verify log and inconsistent between the two twins). */
-  private def timed[A](what: String)(body: => A): A =
-    if (!sys.env.contains("GRAFT_EXPORT_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[omrs] $what%s took ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** Direct-frame-ingress export memo: the comparison baseline CSV,
     * written once per (session, dir) — the gate's timed body then pays
     * the JDBC-ingress export (the path under test) plus the byte
@@ -231,7 +217,7 @@ object ScaledOmrs {
     .empty[(SparkSession, String), String]
   private def directCsv(s: SparkSession, dir: String, n: Long,
       cfg: ConceptsConfig): String =
-    directCsvStage.getOrElseUpdate((s, dir), timed(s"direct export n=$n") {
+    directCsvStage.getOrElseUpdate((s, dir), {
       val out = tmpDir(s, dir).resolve("concepts_direct.csv").toString
       val direct = tables(s, n)
       ConceptsExport.export(direct(_), cfg, out)
@@ -265,9 +251,8 @@ object ScaledOmrs {
       java.nio.file.Files.createTempDirectory("graft_omrs_scale_")
     })
 
-  /** Bench stage hook (see PipelineQueries.sharedStageBuilders); the
-    * [[timed]] stderr lines inside the memos attribute the stage row's
-    * cost between the Derby ingest and the direct-export baseline. */
+  /** Bench stage hook (see PipelineQueries.sharedStageBuilders): the
+    * Derby ingest and the direct-export baseline, built once. */
   def buildDbStage(s: SparkSession, dir: String): Unit = {
     val n = scaleFor(s, dir)
     derbyDb(s, dir, n)
@@ -316,7 +301,7 @@ object ScaledOmrs {
     val outJ = tmpDir(s, dir).resolve("concepts_jdbc.csv").toString
     val outD = directCsv(s, dir, n, cfg)
     val t0 = System.nanoTime()
-    timed(s"jdbc export n=$n") { ConceptsExport.export(jdbcResolver, cfg, outJ) }
+    ConceptsExport.export(jdbcResolver, cfg, outJ)
     val jdbcSec = (System.nanoTime() - t0) / 1e9
     val bj = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(outJ))
     val bd = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(outD))

@@ -1,20 +1,35 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
-/** Distributed graph algorithms over edge DataFrames — the Spark-first
+/** Graph algorithms over edge DataFrames — the Spark-first
   * re-expression of the reference's in-memory Python graph stage
   * (`concepts/src/concept_csv_export.py:407-530`): BFS descendant
-  * closure (G1), cycle detection (G2), topological reordering (O4).
+  * closure (G1), cycle detection (G2), topological reordering (O4),
+  * plus the ranking, community and dedup-grouping graph operators.
   *
-  * Design (SURVEY §2.6): edges live in a `DataFrame(src, dst)`; all
-  * three algorithms are driver-orchestrated iterative DataFrame jobs.
-  * Each iteration `localCheckpoint()`s to cut lineage (SURVEY §7.4.4)
-  * — without it the plan doubles per iteration and Catalyst analysis
-  * time explodes. No GraphX/GraphFrames dependency. At cluster scale
-  * the per-iteration shuffle is hash-partitioned on the join key, and
-  * iteration count is bounded by graph diameter, not node count.
+  * Design (SURVEY §2.6): edges live in a `DataFrame(src, dst)`. Two
+  * execution shapes:
+  *  - Driver-side: [[detectCycles]] and [[topoOrder]], the concepts
+  *    export's graph stage, collect the edge frame once and peel it on
+  *    the driver (one Spark job each instead of two per fixpoint
+  *    level). Driver memory is bounded by the edge count, and a
+  *    concepts export's edges are bounded by the dictionary's set and
+  *    answer links (tens of thousands per dictionary) — the reference
+  *    holds the same graph in a Python dict, and the single-file CSV
+  *    sink already passes every exported row through one task.
+  *  - Distributed: everything else, including [[topoDepth]],
+  *    [[findCycleNodes]] and [[bfsClosure]] for hierarchies of
+  *    unbounded size, is a driver-orchestrated iterative DataFrame
+  *    fixpoint. Each iteration `localCheckpoint()`s to cut lineage
+  *    (SURVEY §7.4.4) — without it the plan doubles per iteration and
+  *    Catalyst analysis time explodes. At cluster scale the
+  *    per-iteration shuffle is hash-partitioned on the join key, and
+  *    iteration count is bounded by graph diameter, not node count.
+  *
+  * No GraphX/GraphFrames dependency.
   */
 object GraphOps {
 
@@ -218,45 +233,93 @@ object GraphOps {
     remaining
   }
 
+  /** The driver-side sink peel behind [[detectCycles]] and
+    * [[topoOrder]]: `nodes(i)` is a node id (typed `nodeType`), `src`
+    * and `dst` hold each edge as a pair of node indices, and `level(i)`
+    * is node i's peel level — its longest-path depth — or -1 if it was
+    * never peeled. */
+  private final class SinkPeel(val nodeType: DataType, val nodes: Array[Any],
+      val src: Array[Int], val dst: Array[Int], val level: Array[Int])
+
+  /** Collect `(src, dst)` once (one Spark job) and peel sinks level by
+    * level (Kahn over out-degrees): level 0 is every node without an
+    * out-edge, level k every node whose last live out-edge pointed at
+    * level k-1, so a node's level is [[topoDepth]]'s longest-path depth.
+    * The never-peeled nodes are exactly [[findCycleNodes]]' set — the
+    * nodes that can reach a cycle. Edges with a null endpoint are
+    * dropped, as in the distributed joins, where a null never matches a
+    * node. Node ids must compare by value (strings, numbers). */
+  private def peelSinks(edges: DataFrame): SinkPeel = {
+    val e = edges.toDF("src", "dst")
+    // the type a node union resolves to — analysis only, no job
+    val nodeType = e.select(col("src")).union(e.select(col("dst")))
+      .schema.head.dataType
+    val rows = e.filter(col("src").isNotNull && col("dst").isNotNull)
+      .select(col("src").cast(nodeType), col("dst").cast(nodeType))
+      .collect()
+    val index = scala.collection.mutable.HashMap.empty[Any, Int]
+    val nodes = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def idOf(v: Any): Int = index.getOrElseUpdate(v, { nodes += v; nodes.length - 1 })
+    val src = rows.map(r => idOf(r.get(0)))
+    val dst = rows.map(r => idOf(r.get(1)))
+    val n = nodes.length
+    val outDeg = new Array[Int](n)
+    src.foreach(outDeg(_) += 1)
+    val preds = Array.fill(n)(List.empty[Int])
+    for (k <- src.indices) preds(dst(k)) ::= src(k)
+    val level = Array.fill(n)(-1)
+    var frontier = (0 until n).filter(outDeg(_) == 0).toArray
+    var depth = 0
+    while (frontier.nonEmpty) {
+      frontier.foreach(level(_) = depth)
+      val next = scala.collection.mutable.ArrayBuilder.make[Int]
+      for (d <- frontier; s <- preds(d)) {
+        outDeg(s) -= 1
+        if (outDeg(s) == 0) next += s
+      }
+      frontier = next.result()
+      depth += 1
+    }
+    new SinkPeel(nodeType, nodes.toArray, src, dst, level)
+  }
+
+  /** Cyclic node count above which the cycle message omits the witness. */
+  private val WitnessLimit = 100000
+
+  /** Raise the V2 `CycleException` if the peel left nodes behind. The
+    * witness walks the never-peeled subgraph (every node in it has an
+    * out-edge inside it) from its smallest node, always to the smallest
+    * neighbour, until a node repeats; the repeat closes the cycle. */
+  private def failOnCycle(p: SinkPeel, witnessLimit: Int): Unit = {
+    val cyclic = p.level.indices.filter(p.level(_) < 0)
+    if (cyclic.isEmpty) return
+    if (cyclic.length > witnessLimit)
+      throw new CycleException(
+        s"graph contains cycles over ${cyclic.length} nodes (witness suppressed)")
+    val adj = p.src.indices
+      .filter(k => p.level(p.src(k)) < 0 && p.level(p.dst(k)) < 0)
+      .groupBy(p.src(_)).map { case (s, ks) => s -> ks.map(p.dst(_)) }
+    def smallest(ids: Iterable[Int]): Int = ids.minBy(p.nodes(_).toString)
+    val path = scala.collection.mutable.ArrayBuffer(smallest(cyclic))
+    val seen = scala.collection.mutable.HashSet(path.head)
+    var nxt = smallest(adj(path.head))
+    while (!seen(nxt)) {
+      path += nxt; seen += nxt
+      nxt = smallest(adj(nxt))
+    }
+    val witness = (path.drop(path.indexOf(nxt)) :+ nxt)
+      .map(p.nodes(_)).mkString(" --> ")
+    throw new CycleException(s"Cycle detected: $witness")
+  }
+
   /** Cycle guard with a human-readable witness (V2): raises
     * `CycleException` whose message contains an `a --> b --> a` path,
     * mirroring the reference's error contract
-    * (`concept_csv_export.py:490-496`). The witness reconstruction
-    * collects only the cyclic subgraph (already peeled down — small by
-    * construction), never the full graph.
-    */
-  def detectCycles(edges: DataFrame, witnessLimit: Int = 100000): Unit = {
-    val cyc = findCycleNodes(edges)
-    val n = cyc.count()
-    if (n == 0) return
-    if (n > witnessLimit)
-      throw new CycleException(s"graph contains cycles over $n nodes (witness suppressed)")
-    // restrict edges to the cyclic subgraph via joins (never an IN-list
-    // expression over a collected set), THEN collect the small remainder
-    val sub = edges.toDF("src", "dst")
-      .join(cyc.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-      .join(cyc.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-      .select("src", "dst") // using-column joins reorder: key column first
-      .collect().map(r => r.get(0) -> r.get(1))
-    val adj = sub.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
-    // walk from the smallest node until a repeat — deterministic witness;
-    // O(1) membership via a set alongside the ordered path
-    val startKey = sub.map(_._1).minBy(_.toString)
-    val path = scala.collection.mutable.ArrayBuffer[Any](startKey)
-    val seen = scala.collection.mutable.HashSet[Any](startKey)
-    var cur = startKey
-    var done = false
-    while (!done) {
-      val nxt = adj(cur).minBy(_.toString)
-      if (seen(nxt)) {
-        path += nxt
-        done = true
-      } else { path += nxt; seen += nxt; cur = nxt }
-    }
-    val cycleStart = path.indexOf(path.last)
-    val witness = path.drop(cycleStart).mkString(" --> ")
-    throw new CycleException(s"Cycle detected: $witness")
-  }
+    * (`concept_csv_export.py:490-496`). Runs on the driver over one
+    * collect of the edges (see [[peelSinks]]); the distributed
+    * [[findCycleNodes]] gives the same verdict. */
+  def detectCycles(edges: DataFrame, witnessLimit: Int = WitnessLimit): Unit =
+    failOnCycle(peelSinks(edges), witnessLimit)
 
   /** Connected components over an UNDIRECTED edge set (the edges are
     * symmetrized internally): returns `(node, comp)` where comp is the
@@ -676,13 +739,22 @@ object GraphOps {
   /** Topological reorder (O4, `concept_csv_export.py:499-530`): order
     * rows so that every referenced node precedes its referrers, stable
     * by `tieBreak` within a depth layer. Returns the input plus an
-    * `__ord` rank column; callers sort by it. Matches the reference's
+    * `__ord` rank column (the node's [[topoDepth]], 0 for keys outside
+    * the edge set); callers sort by it. Matches the reference's
     * contract (referrer strictly after all referents —
-    * `test_concept_csv_export.py:33-51`).
+    * `test_concept_csv_export.py:33-51`). Depths come from one driver-
+    * side peel (see [[peelSinks]]) and join onto `df` as a broadcast
+    * local frame; cyclic edges raise [[detectCycles]]' `CycleException`.
     */
   def topoOrder(df: DataFrame, keyCol: String, edges: DataFrame): DataFrame = {
-    val depth = topoDepth(edges).withColumnRenamed("node", "__node")
-    df.join(depth, df(keyCol) === col("__node"), "left")
+    val p = peelSinks(edges)
+    failOnCycle(p, WitnessLimit)
+    import scala.jdk.CollectionConverters._
+    val depth = df.sparkSession.createDataFrame(
+      p.nodes.indices.map(i => Row(p.nodes(i), p.level(i))).asJava,
+      StructType(Seq(StructField("__node", p.nodeType, nullable = false),
+        StructField("depth", IntegerType, nullable = false))))
+    df.join(broadcast(depth), df(keyCol) === col("__node"), "left")
       .drop("__node")
       .withColumn("__ord", coalesce(col("depth"), lit(0)))
       .drop("depth")

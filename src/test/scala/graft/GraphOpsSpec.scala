@@ -71,6 +71,47 @@ class GraphOpsSpec extends AnyFunSuite {
     GraphOps.detectCycles(conceptEdges(reorderFixture))
   }
 
+  test("detect_cycles: a tail into a cycle is cut off the witness") {
+    val edges = Seq(("a", "z"), ("z", "y"), ("y", "z")).toDF("src", "dst")
+    val e = intercept[CycleException] { GraphOps.detectCycles(edges) }
+    assert(e.getMessage == "Cycle detected: z --> y --> z")
+  }
+
+  test("detect_cycles: a self-loop is its own witness") {
+    val edges = Seq(("a", "a"), ("b", "a")).toDF("src", "dst")
+    val e = intercept[CycleException] { GraphOps.detectCycles(edges) }
+    assert(e.getMessage == "Cycle detected: a --> a")
+  }
+
+  test("topoOrder on cyclic edges raises detectCycles' witness") {
+    val edges = conceptEdges(Seq(
+      ("a", "", "b;c"),
+      ("c", "d", ""),
+      ("d", "f", ""),
+      ("f", "c", "")))
+    val want = intercept[CycleException] { GraphOps.detectCycles(edges) }
+    val got = intercept[CycleException] {
+      GraphOps.topoOrder(Seq("a", "b", "c").toDF("key"), "key", edges)
+    }
+    assert(got.getMessage == want.getMessage)
+    assert(got.getMessage.contains("c --> d --> f --> c"))
+  }
+
+  test("null edge endpoints match no node: no depth, no cycle") {
+    val edges = Seq[(Option[String], Option[String])](
+      (Some("a"), None), (None, Some("b")), (Some("c"), Some("a")),
+      (None, None)).toDF("src", "dst")
+    GraphOps.detectCycles(edges)
+    val ord = GraphOps.topoOrder(Seq("a", "b", "c").toDF("key"), "key", edges)
+      .as[(String, Int)].collect().toMap
+    assert(ord == Map("a" -> 0, "b" -> 0, "c" -> 1))
+    // the distributed fixpoints agree
+    assert(GraphOps.findCycleNodes(edges).count() == 0)
+    val depth = GraphOps.topoDepth(edges).filter(col("node").isNotNull)
+      .as[(String, Int)].collect().toMap
+    assert(depth == ord)
+  }
+
   test("integration: tree-filter, cycle-check, reorder, exclude => [c, a]") {
     val fixture = Seq(
       ("a", "", "b"),

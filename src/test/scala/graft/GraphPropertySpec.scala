@@ -45,6 +45,48 @@ class GraphPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("driver-side topoOrder/detectCycles agree with the distributed topoDepth/findCycleNodes") {
+    import org.apache.spark.sql.DataFrame
+    import graft.graph.CycleException
+    val rng = new scala.util.Random(29)
+    /** Driver verdict and depths vs the distributed fixpoints, over the
+      * node frame `nodes` (one column `key`). */
+    def check(edges: DataFrame, nodes: DataFrame, what: String): Unit = {
+      val distCyclic = GraphOps.findCycleNodes(edges).count() > 0
+      val driverCyclic =
+        try { GraphOps.detectCycles(edges); false }
+        catch { case _: CycleException => true }
+      assert(driverCyclic == distCyclic, s"cycle verdict differs on $what")
+      if (!distCyclic) {
+        val got = GraphOps.topoOrder(nodes, "key", edges)
+          .select("key", "__ord").collect().map(r => r.get(0) -> r.getInt(1)).toMap
+        val want = GraphOps.topoDepth(edges)
+          .collect().map(r => r.get(0) -> r.getInt(1)).toMap
+        assert(got == want, s"depths differ on $what")
+      }
+    }
+    def strings(es: Seq[(String, String)], what: String): Unit =
+      check(es.toDF("src", "dst"),
+        es.flatMap(e => Seq(e._1, e._2)).distinct.toDF("key"), what)
+    def longs(es: Seq[(String, String)], what: String): Unit = {
+      val ls = es.map { case (a, b) => (a.tail.toLong, b.tail.toLong) }
+      check(ls.toDF("src", "dst"),
+        ls.flatMap(e => Seq(e._1, e._2)).distinct.toDF("key"), s"$what (Long ids)")
+    }
+    (1 to 3).foreach { i =>
+      val dag = randomDag(rng)
+      val (a, b) = dag.head
+      val cases = Seq(
+        s"DAG $i" -> dag,
+        s"DAG $i + back-edge" -> ((b, a) :: dag),
+        s"DAG $i + self-loop" -> ((a, a) :: dag),
+        s"DAG $i + duplicate edges" -> (dag ++ dag.take(3)))
+      cases.foreach { case (what, es) =>
+        if (i % 2 == 1) strings(es, s"$what: $es") else longs(es, s"$what: $es")
+      }
+    }
+  }
+
   test("connectedComponents: chains collapse to min-id groups; singletons separate") {
     import org.apache.spark.sql.functions.col
     // components: {1,2,3,9} (chain), {5,6}
