@@ -68,15 +68,12 @@ object ExportCli {
             "stop character ';' and will corrupt delimited cells:")
           warnings.take(20).foreach(r => System.err.println(s"  $r"))
         }
-        opts.get("exclude-files") match {
-          case None => ConceptsExport.export(tables, cfg, out)
-          case Some(files) =>
-            val rows = ConceptsExport.pipeline(tables, cfg)
-            val excl = CsvSource.excludeKeys(spark, cfg.key,
-              files.split(",").toSeq)
-            val kept = CsvSource.applyExcludes(rows, cfg.key, excl)
-            ConceptsExport.writeOrdered(kept, cfg, out)
+        val rows = ConceptsExport.pipeline(tables, cfg)
+        val kept = opts.get("exclude-files").fold(rows) { files =>
+          CsvSource.applyExcludes(rows, cfg.key,
+            CsvSource.excludeKeys(spark, cfg.key, files.split(",").toSeq))
         }
+        ConceptsExport.writeOrdered(kept, cfg, out)
       case "locations" => LocationsExport.export(tables, out)
       case "ordertypes" => OrderTypesExport.export(tables, out)
       case "conceptset" =>
@@ -109,10 +106,15 @@ object ExportCli {
     }
   }
 
-  private def parse(args: Array[String]): (String, Map[String, String]) = {
-    require(args.nonEmpty, "domain required: concepts|locations|ordertypes|conceptset")
-    val opts = args.tail.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
+  /** `<domain> (--<option> <value>)*`; anything else is a usage error. */
+  private[graft] def parse(args: Array[String]): (String, Map[String, String]) = {
+    def usage(problem: String): Nothing = throw new IllegalArgumentException(
+      s"$problem (usage: ExportCli <domain> [--<option> <value>]...)")
+    if (args.isEmpty) usage("domain required: concepts|locations|ordertypes|conceptset")
+    val opts = args.tail.grouped(2).map {
+      case Array(k, v) if k.startsWith("--") && !v.startsWith("--") => k.drop(2) -> v
+      case Array(k, _*) if k.startsWith("--") => usage(s"missing value for $k")
+      case Array(t, _*) => usage(s"unexpected argument '$t'")
     }.toMap
     (args.head, opts)
   }

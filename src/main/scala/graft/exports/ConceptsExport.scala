@@ -176,28 +176,26 @@ object ConceptsExport {
 
   /** Key-mapping remap (R5/P9/V3, `concept_csv_export.py:392-404`):
     * `_mapping:<src>` = first SAME-AS code for the key source; hard
-    * error when any concept lacks one. */
-  def withKeyMapping(df: DataFrame, cfg: ConceptsConfig): DataFrame =
-    cfg.conceptKeyMapping match {
-      case None => df
-      case Some(src) =>
-        val mcol = s"Mappings|SAME-AS|$src"
-        // Materialize ONCE (localCheckpoint) before the eager guard:
-        // the guard scan and every downstream consumer (edge builder,
-        // tree filter, topo sort, ordered CSV write) read the
-        // checkpoint — previously the guard alone re-executed the full
-        // multi-join `wide` plan before the real export ran.
-        val out = df.withColumn(cfg.key,
-          element_at(split(coalesce(qcol(mcol), lit("")), ";"), 1))
-          .localCheckpoint()
-        val bad = out.filter(length(qcol(cfg.key)) === 0)
-        val badSample = bad.select("uuid").limit(5).collect().map(_.getString(0))
-        if (badSample.nonEmpty)
-          throw new IllegalStateException(
-            s"concepts without a non-retired SAME-AS mapping for source '$src': " +
-              s"uuids ${badSample.mkString(", ")}")
-        out
+    * error when any concept lacks one. Materializes the wide frame ONCE
+    * (localCheckpoint) on both paths: the guard scan and every
+    * downstream consumer (edge builder, topo join, ordered CSV write)
+    * read the checkpoint instead of re-executing the multi-join `wide`
+    * plan. */
+  def withKeyMapping(df: DataFrame, cfg: ConceptsConfig): DataFrame = {
+    val out = cfg.conceptKeyMapping.fold(df) { src =>
+      df.withColumn(cfg.key, element_at(
+        split(coalesce(qcol(s"Mappings|SAME-AS|$src"), lit("")), ";"), 1))
+    }.localCheckpoint()
+    cfg.conceptKeyMapping.foreach { src =>
+      val badSample = out.filter(length(qcol(cfg.key)) === 0)
+        .select("uuid").limit(5).collect().map(_.getString(0))
+      if (badSample.nonEmpty)
+        throw new IllegalStateException(
+          s"concepts without a non-retired SAME-AS mapping for source '$src': " +
+            s"uuids ${badSample.mkString(", ")}")
     }
+    out
+  }
 
   /** Referent edges (G3) at key level: (referrer key, referent key),
     * built from the link tables directly — not by re-parsing the
@@ -216,9 +214,10 @@ object ConceptsExport {
       .distinct()
   }
 
-  /** Full pipeline: wide → key remap → optional tree filter (G1) →
-    * cycle guard (G2) → topological order (O4). Returns the export rows
-    * plus `__ord`/`__tie` ordering columns. */
+  /** Full pipeline: wide → key remap → one [[GraphOps.topoOrder]] call
+    * that does the optional tree filter (G1), the cycle guard (G2) and
+    * the topological order (O4) in a single driver pass over the edges.
+    * Returns the export rows plus `__ord`/`__tie` ordering columns. */
   def pipeline(t: String => DataFrame, cfg: ConceptsConfig): DataFrame = {
     // O3: the reference's optional LIMIT applies to the base query
     // (ORDER BY is_set LIMIT n, concept_csv_export.py:379-385) BEFORE
@@ -228,37 +227,10 @@ object ConceptsExport {
         .orderBy(col("is_set"), col("concept_id")).limit(n)
       case None => wide(t, cfg)
     }
-    val all0 = withKeyMapping(widened, cfg)
-    // withKeyMapping checkpoints when it remaps (its guard needs the
-    // materialized rows); the None path returned the LIVE wide plan,
-    // so the edge builder, the selEdges semi-join, the topo join and
-    // the ordered write each re-executed the multi-join wide plan —
-    // 2–3 full executions per export in the q470 gate config (r16).
-    // Checkpoint exactly once on whichever path lacks it.
-    val all = if (cfg.conceptKeyMapping.isDefined) all0
-      else all0.localCheckpoint()
-    val e = edges(t, all, cfg)
-    val selected = cfg.setName match {
-      case None => all
-      case Some(root) =>
-        val spark = all.sparkSession
-        import spark.implicits._
-        val inTree = GraphOps.bfsClosure(e, Seq(root).toDF("node"))
-        all.join(inTree.withColumnRenamed("node", cfg.key), Seq(cfg.key), "left_semi")
-    }
-    // materialize the (dictionary-sized) edge set ONCE: detectCycles
-    // and topoOrder each collect it to the driver, so without the
-    // checkpoint the JDBC-scan + join + distinct edge derivation would
-    // run twice; with it the graph stage is two collects over one
-    // checkpoint. Driver memory for the graph stage is bounded by these
-    // edges, i.e. by the dictionary's set and answer links.
-    val selEdges = e.join(
-      selected.select(qcol(cfg.key).as("src")), Seq("src"), "left_semi")
-      .localCheckpoint()
-    GraphOps.detectCycles(selEdges)
+    val all = withKeyMapping(widened, cfg)
     // O4: depth-sort puts every referent before its referrers; ties
     // stay in the reference's initial order (is_set asc, concept_id).
-    GraphOps.topoOrder(selected, cfg.key, selEdges)
+    GraphOps.topoOrder(all, cfg.key, edges(t, all, cfg), cfg.setName)
       .withColumn("__tie", struct(col("is_set"), col("concept_id")))
   }
 

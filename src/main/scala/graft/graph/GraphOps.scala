@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   *
   * Design (SURVEY §2.6): edges live in a `DataFrame(src, dst)`. Two
   * execution shapes:
-  *  - Driver-side: [[detectCycles]] and [[topoOrder]], the concepts
-  *    export's graph stage, collect the edge frame once and peel it on
-  *    the driver (one Spark job each instead of two per fixpoint
-  *    level). Driver memory is bounded by the edge count, and a
+  *  - Driver-side: [[detectCycles]] and [[topoOrder]] collect the edge
+  *    frame once and peel it on the driver; one rooted [[topoOrder]] is
+  *    the concepts export's whole graph stage (G1 closure, G2 guard, O4
+  *    depth). Driver memory is bounded by the edge count, and a
   *    concepts export's edges are bounded by the dictionary's set and
   *    answer links (tens of thousands per dictionary) — the reference
   *    holds the same graph in a Python dict, and the single-file CSV
@@ -248,18 +248,29 @@ object GraphOps {
     * The never-peeled nodes are exactly [[findCycleNodes]]' set — the
     * nodes that can reach a cycle. Edges with a null endpoint are
     * dropped, as in the distributed joins, where a null never matches a
-    * node. Node ids must compare by value (strings, numbers). */
-  private def peelSinks(edges: DataFrame): SinkPeel = {
+    * node. Node ids must compare by value (strings, numbers). A `root`
+    * keeps only the edges leaving its closure (a BFS over the same
+    * collect) and is a node even without edges. */
+  private def peelSinks(edges: DataFrame, root: Option[Any] = None): SinkPeel = {
     val e = edges.toDF("src", "dst")
     // the type a node union resolves to — analysis only, no job
     val nodeType = e.select(col("src")).union(e.select(col("dst")))
       .schema.head.dataType
-    val rows = e.filter(col("src").isNotNull && col("dst").isNotNull)
+    val all = e.filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src").cast(nodeType), col("dst").cast(nodeType))
       .collect()
+    val rows = root.fold(all) { r =>
+      val out = all.groupBy(_.get(0))
+      val seen = scala.collection.mutable.HashSet(r)
+      var frontier = Seq(r)
+      while (frontier.nonEmpty) frontier = frontier
+        .flatMap(out.getOrElse(_, Array.empty[Row]).map(_.get(1))).filter(seen.add)
+      all.filter(row => seen(row.get(0)))
+    }
     val index = scala.collection.mutable.HashMap.empty[Any, Int]
     val nodes = scala.collection.mutable.ArrayBuffer.empty[Any]
     def idOf(v: Any): Int = index.getOrElseUpdate(v, { nodes += v; nodes.length - 1 })
+    root.foreach(idOf)
     val src = rows.map(r => idOf(r.get(0)))
     val dst = rows.map(r => idOf(r.get(1)))
     val n = nodes.length
@@ -745,16 +756,21 @@ object GraphOps {
     * `test_concept_csv_export.py:33-51`). Depths come from one driver-
     * side peel (see [[peelSinks]]) and join onto `df` as a broadcast
     * local frame; cyclic edges raise [[detectCycles]]' `CycleException`.
+    * With a `root` (G1 tree filter) only the root's [[bfsClosure]] is
+    * peeled, so a cycle outside it passes, and the depths join `inner`:
+    * the closure's rows remain, the root's even without edges.
     */
-  def topoOrder(df: DataFrame, keyCol: String, edges: DataFrame): DataFrame = {
-    val p = peelSinks(edges)
+  def topoOrder(df: DataFrame, keyCol: String, edges: DataFrame,
+      root: Option[Any] = None): DataFrame = {
+    val p = peelSinks(edges, root)
     failOnCycle(p, WitnessLimit)
     import scala.jdk.CollectionConverters._
     val depth = df.sparkSession.createDataFrame(
       p.nodes.indices.map(i => Row(p.nodes(i), p.level(i))).asJava,
       StructType(Seq(StructField("__node", p.nodeType, nullable = false),
         StructField("depth", IntegerType, nullable = false))))
-    df.join(broadcast(depth), df(keyCol) === col("__node"), "left")
+    df.join(broadcast(depth), df(keyCol) === col("__node"),
+        if (root.isDefined) "inner" else "left")
       .drop("__node")
       .withColumn("__ord", coalesce(col("depth"), lit(0)))
       .drop("depth")

@@ -3,6 +3,7 @@ package graft.sink
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.commons.io.FileUtils
 
 /** Ordered single-file CSV sink with the Initializer header contract
   * (S5/R3/R4/A6/P10 — `concepts/src/concept_csv_export.py:183-190,607-629`;
@@ -49,20 +50,24 @@ object CsvSink {
 
   /** Write `df` as ONE CSV file at `path` (header, ordered by
     * `orderCols`), selecting `columns` in exact order. Spark writes a
-    * part-file into a temp dir; the part is moved to `path`. */
+    * part-file into a staging dir; the part is moved to `path` and the
+    * staging dir (`_SUCCESS`, `.crc` files) is deleted. */
   def write(df: DataFrame, columns: Seq[String], orderCols: Seq[Column],
       path: String): Unit = {
     val out = renderStrings(
       df.orderBy(orderCols: _*).select(columns.map(qcol): _*))
-    val tmp = Files.createTempDirectory("graft-csv").toString + "/out"
-    out.coalesce(1).write
-      .option("header", "true").option("emptyValue", "")
-      .mode("overwrite").csv(tmp)
-    val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-      .find(p => p.endsWith(".csv") && p.contains("part-"))
-      .getOrElse(sys.error(s"no part file written under $tmp"))
-    val target = Paths.get(path)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    Files.move(Paths.get(part), target, StandardCopyOption.REPLACE_EXISTING)
+    val staging = Files.createTempDirectory("graft-csv")
+    try {
+      val tmp = staging.resolve("out").toString
+      out.coalesce(1).write
+        .option("header", "true").option("emptyValue", "")
+        .mode("overwrite").csv(tmp)
+      val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
+        .find(p => p.endsWith(".csv") && p.contains("part-"))
+        .getOrElse(sys.error(s"no part file written under $tmp"))
+      val target = Paths.get(path)
+      Option(target.getParent).foreach(Files.createDirectories(_))
+      Files.move(Paths.get(part), target, StandardCopyOption.REPLACE_EXISTING)
+    } finally FileUtils.deleteDirectory(staging.toFile)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.config.ConceptsConfig
 import graft.exports.{ConceptSetCreator, ConceptsExport, LocationsExport, OrderTypesExport}
+import graft.graph.CycleException
 import graft.sink.CsvSink
 import graft.sources.{CsvSource, JdbcSource}
 import java.nio.file.{Files, Paths}
@@ -87,6 +88,39 @@ class ExportsSpec extends AnyFunSuite {
         cfg.copy(setName = Some("Vital signs")))
       .select("uuid").as[String].collect().toSet
     assert(rows == Set("uuid-1", "uuid-2", "uuid-3", "uuid-4", "uuid-5"))
+  }
+
+  test("concepts pipeline: a --set-name export passes a cycle outside the tree") {
+    // 7 -> 7 is a cycle, but 7 is not in the Vital signs tree
+    val selfLoop: String => org.apache.spark.sql.DataFrame = {
+      case "concept_answer" => conceptAnswer.unionByName(
+        Seq((7L, 7L, 1.0)).toDF("concept_id", "answer_concept", "sort_weight"))
+      case other => conceptTables(other)
+    }
+    intercept[CycleException] { ConceptsExport.pipeline(selfLoop, cfg) }
+    val out = Files.createTempDirectory("graft-tree").resolve("vitals.csv")
+    ConceptsExport.export(selfLoop, cfg.copy(setName = Some("Vital signs")), out.toString)
+    assert(Files.readAllLines(out).asScala.tail.map(_.split(",", -1).head).toSet ==
+      Set("uuid-1", "uuid-2", "uuid-3", "uuid-4", "uuid-5"))
+  }
+
+  test("concepts pipeline: a 12-deep set chain exports exactly the chain, deepest first") {
+    // set Chain 0 has member Chain 1, which has member Chain 2, ... Chain 11
+    val ids = 100L to 111L
+    val chain: String => org.apache.spark.sql.DataFrame = {
+      case "concept" => concept.unionByName(ids.map(i => (i, s"chain-$i", 10L, 20L, 0, 1))
+        .toDF("concept_id", "uuid", "class_id", "datatype_id", "retired", "is_set"))
+      case "concept_name" => conceptName.unionByName(
+        ids.map(i => (i, s"Chain ${i - 100}", "en", "FULLY_SPECIFIED", 0))
+          .toDF("concept_id", "name", "locale", "concept_name_type", "voided"))
+      case "concept_set" => conceptSet.unionByName(ids.init.map(i => (i, i + 1, 1.0))
+        .toDF("concept_set", "concept_id", "sort_weight"))
+      case other => conceptTables(other)
+    }
+    val rows = ConceptsExport.pipeline(chain, cfg.copy(setName = Some("Chain 0")))
+      .orderBy(col("__ord"), col("__tie"))
+      .select("uuid").as[String].collect().toSeq
+    assert(rows == ids.reverse.map(i => s"chain-$i"))
   }
 
   test("concepts: limit applies to the is_set-ordered base query (O3)") {
@@ -339,6 +373,18 @@ class ExportsSpec extends AnyFunSuite {
     assert(Files.readAllLines(Paths.get(out)).asScala.toSeq == Seq("k"))
   }
 
+  test("csv sink: a write leaves no graft-csv staging dir in java.io.tmpdir") {
+    val tmpDir = Paths.get(System.getProperty("java.io.tmpdir"))
+    def staging(): Set[String] = scala.util.Using.resource(Files.list(tmpDir)) {
+      _.iterator.asScala.map(_.getFileName.toString).filter(_.startsWith("graft-csv")).toSet
+    }
+    val before = staging()
+    val out = Files.createTempDirectory("graft-test").resolve("k.csv").toString
+    CsvSink.write(Seq("a", "b").toDF("k"), Seq("k"), Seq(col("k")), out)
+    assert(Files.readAllLines(Paths.get(out)).asScala.toSeq == Seq("k", "a", "b"))
+    assert(staging() -- before == Set.empty, "staging dir left behind")
+  }
+
   test("jdbc auto-partitioned bounds work on an INTEGER (non-BIGINT) key") {
     import graft.sources.{JdbcConfig, JdbcSource}
     val url = "jdbc:derby:memory:graftint;create=true"
@@ -474,6 +520,19 @@ class ExportsSpec extends AnyFunSuite {
     assert(lines.head.startsWith("UUID,Void/Retire,Name,Description,Parent"))
     assert(lines.tail.map(_.split(",", -1).head) ==
       Seq("loc-1", "loc-2", "loc-3", "loc-4", "loc-5"))
+  }
+
+  test("cli: a flag without a value or a stray token is a usage error naming it") {
+    assert(ExportCli.parse(Array("concepts", "--tables", "csv:/t", "--out", "x.csv")) ==
+      ("concepts", Map("tables" -> "csv:/t", "out" -> "x.csv")))
+    def usageError(args: String*): String =
+      intercept[IllegalArgumentException](ExportCli.parse(args.toArray)).getMessage
+    assert(usageError("concepts", "--tables", "csv:/t", "--out", "x.csv", "--set-name")
+      .contains("missing value for --set-name"))
+    assert(usageError("concepts", "--set-name", "--out", "x.csv")
+      .contains("missing value for --set-name"))
+    assert(usageError("concepts", "--out", "x.csv", "stray")
+      .contains("unexpected argument 'stray'"))
   }
 
   test("config: key mapping validates SAME-AS and source membership up front") {

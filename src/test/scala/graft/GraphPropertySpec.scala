@@ -21,6 +21,14 @@ class GraphPropertySpec extends AnyFunSuite {
     }.distinct
   }
 
+  /** The distributed reference for a rooted topoOrder: bfsClosure from
+    * `root` and the edges leaving that closure. */
+  private def closure(edges: org.apache.spark.sql.DataFrame,
+      root: org.apache.spark.sql.DataFrame) = {
+    val nodes = GraphOps.bfsClosure(edges, root)
+    (nodes, edges.join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi"))
+  }
+
   test("random DAGs: topoDepth yields a valid topological order") {
     val rng = new scala.util.Random(7)
     (1 to 5).foreach { _ =>
@@ -84,6 +92,73 @@ class GraphPropertySpec extends AnyFunSuite {
       cases.foreach { case (what, es) =>
         if (i % 2 == 1) strings(es, s"$what: $es") else longs(es, s"$what: $es")
       }
+    }
+  }
+
+  test("rooted topoOrder agrees with bfsClosure and topoDepth over the closure's edges") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    val rng = new scala.util.Random(31)
+    /** Rooted driver pass vs the distributed references: the row set is
+      * bfsClosure's, the depths are topoDepth's over the edges leaving
+      * the closure (0 for a root without edges). `nodes` holds every
+      * edge endpoint; the root is added to it. */
+    def check(edges: DataFrame, nodes: DataFrame, root: Any, what: String): Unit = {
+      val rootDf = spark.createDataFrame(
+        java.util.Collections.singletonList(Row(root)), nodes.schema)
+      val (tree, treeEdges) = closure(edges, rootDf)
+      val depth = GraphOps.topoDepth(treeEdges)
+        .collect().map(r => r.get(0) -> r.getInt(1)).toMap
+      val want = tree.collect().map(r => r.get(0) -> depth.getOrElse(r.get(0), 0)).toMap
+      val got = GraphOps.topoOrder(nodes.union(rootDf).distinct(), "key", edges, Some(root))
+        .select("key", "__ord").collect().map(r => r.get(0) -> r.getInt(1)).toMap
+      assert(got == want, s"rooted at $root on $what")
+    }
+    (1 to 2).foreach { i =>
+      val dag = randomDag(rng)
+      val srcs = dag.map(_._1).toSet
+      val dsts = dag.map(_._2).toSet
+      val roots = Seq(
+        "leaf" -> (dsts -- srcs).min,
+        "interior" -> (srcs & dsts).headOption.getOrElse(dag.head._1),
+        "top" -> (srcs -- dsts).max,
+        "absent" -> "n99")
+      roots.foreach { case (kind, r) =>
+        val what = s"DAG $i, $kind root: $dag"
+        if (i % 2 == 1)
+          check(dag.toDF("src", "dst"),
+            dag.flatMap(e => Seq(e._1, e._2)).distinct.toDF("key"), r, what)
+        else {
+          val ls = dag.map { case (a, b) => (a.tail.toLong, b.tail.toLong) }
+          check(ls.toDF("src", "dst"),
+            ls.flatMap(e => Seq(e._1, e._2)).distinct.toDF("key"), r.tail.toLong,
+            s"$what (Long ids)")
+        }
+      }
+    }
+  }
+
+  test("rooted topoOrder: a cycle outside the closure passes; one inside raises detectCycles' witness") {
+    import graft.graph.CycleException
+    val rng = new scala.util.Random(37)
+    (1 to 3).foreach { _ =>
+      val dag = randomDag(rng)
+      val (a, b) = dag.head
+      val nodes = (dag.flatMap(e => Seq(e._1, e._2)) ++ Seq("x", "y")).distinct.toDF("key")
+      // x <-> y reaches into a's tree, but nothing in the tree reaches x
+      val outside = (("x", "y") :: ("y", "x") :: ("x", a) :: dag).toDF("src", "dst")
+      intercept[CycleException] { GraphOps.detectCycles(outside) }
+      val tree = GraphOps.bfsClosure(outside, Seq(a).toDF("node")).as[String].collect().toSet
+      val got = GraphOps.topoOrder(nodes, "key", outside, Some(a))
+        .select("key").as[String].collect().toSet
+      assert(got == tree, s"cycle outside $a's tree in $dag")
+      // b --> a closes a cycle inside a's tree
+      val inside = ((b, a) :: dag).toDF("src", "dst")
+      val treeEdges = closure(inside, Seq(a).toDF("node"))._2
+      val want = intercept[CycleException] { GraphOps.detectCycles(treeEdges) }
+      val e = intercept[CycleException] {
+        GraphOps.topoOrder(nodes, "key", inside, Some(a))
+      }
+      assert(e.getMessage == want.getMessage, s"cycle ($b,$a) inside $a's tree in $dag")
     }
   }
 
