@@ -106,7 +106,8 @@ object ExportCli {
     }
   }
 
-  /** `<domain> (--<option> <value>)*`; anything else is a usage error. */
+  /** `<domain> (--<option> <value>)*`, each option at most once;
+    * anything else is a usage error. */
   private[graft] def parse(args: Array[String]): (String, Map[String, String]) = {
     def usage(problem: String): Nothing = throw new IllegalArgumentException(
       s"$problem (usage: ExportCli <domain> [--<option> <value>]...)")
@@ -115,7 +116,9 @@ object ExportCli {
       case Array(k, v) if k.startsWith("--") && !v.startsWith("--") => k.drop(2) -> v
       case Array(k, _*) if k.startsWith("--") => usage(s"missing value for $k")
       case Array(t, _*) => usage(s"unexpected argument '$t'")
-    }.toMap
-    (args.head, opts)
+    }.toSeq
+    val keys = opts.map(_._1)
+    keys.diff(keys.distinct).headOption.foreach(k => usage(s"--$k given more than once"))
+    (args.head, opts.toMap)
   }
 }

@@ -28,6 +28,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   *    Catalyst analysis time explodes. At cluster scale the
   *    per-iteration shuffle is hash-partitioned on the join key, and
   *    iteration count is bounded by graph diameter, not node count.
+  *    [[connectedComponentsStar]] first contracts every partition with
+  *    a union-find (Łącki et al., arXiv:1807.10727) and stops at the
+  *    first min-rooted star forest: an edge set small enough for AQE to
+  *    coalesce into one partition is finished by that single pass, and
+  *    only edges that span partitions pay star rounds.
   *
   * No GraphX/GraphFrames dependency.
   */
@@ -370,45 +375,55 @@ object GraphOps {
     labels
   }
 
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14) — the 100 TB-scale alternative to
-    * [[connectedComponents]]'s min-label propagation. Min-propagation
-    * needs O(diameter) rounds, which on path-shaped similarity chains
-    * (dedup graphs routinely contain them) means thousands of shuffles;
-    * star contraction converges in O(log² n) rounds REGARDLESS of
-    * diameter, each round two groupBy-shuffles on node id:
+  /** Connected components by local contraction followed by alternating
+    * large-star / small-star rounds (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14) — the 100 TB-scale
+    * alternative to [[connectedComponents]]'s min-label propagation.
+    * Min-propagation needs O(diameter) rounds, which on path-shaped
+    * similarity chains (dedup graphs routinely contain them) means
+    * thousands of shuffles; star contraction converges in O(log² n)
+    * rounds REGARDLESS of diameter, each round two groupBy-shuffles on
+    * node id:
     *
     *   - large-star(u): every neighbor v > u re-attaches to
     *     m = min(N(u) ∪ u) — long tails fold onto their local minimum;
     *   - small-star(u): edges oriented child>parent, every parent
     *     (plus u) re-attaches to the minimum parent — stars flatten.
     *
-    * Fixpoint when the edge set stops changing (signature = count +
-    * order-free checksum of canonical edges, one tiny agg per round —
-    * the in-flight-convergence-flag discipline of the other fixpoints
-    * here). Returns `(node, comp)` with comp = the component's minimum
-    * node id, same contract as [[connectedComponents]] — nodes that
-    * appear in `edges` only; callers union isolated nodes themselves.
-    * Self-loops are dropped; the input need not be symmetrized. */
+    * Before the first round every partition contracts its own edges
+    * (Łącki, Mirrokni and Włodarczyk, "Connected Components at Scale
+    * via Local Contractions", arXiv:1807.10727): the canonical edges
+    * are hashed on their lower endpoint, and a union-find per partition
+    * replaces them with one `(localMin, node)` edge per non-root node
+    * (see [[contractLocally]]) — the same components in at most as many
+    * edges. AQE coalesces a small edge set into one partition, whose
+    * pass alone finishes the job; a large one keeps its partitions and
+    * the rounds merge what the partitions could not.
+    *
+    * Fixpoint: a min-rooted star forest (see [[isStarForest]]), tested
+    * by one aggregate after a multi-partition contraction and after
+    * every round — the rounds leave such a forest unchanged, so no
+    * round is spent confirming it. A one-partition contraction is such
+    * a forest by construction and skips the test. Returns
+    * `(node, comp)` with comp = the component's minimum node id, same
+    * contract as [[connectedComponents]] — nodes that appear in `edges`
+    * only; callers union isolated nodes themselves. Self-loops and
+    * edges with a null endpoint are dropped; the input need not be
+    * symmetrized. */
   def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
     val e0 = edges.toDF("u", "v").filter(col("u") =!= col("v"))
-    // canonical undirected form (min, max): one row per edge
-    var e = checkpointed(
+    // canonical undirected form (min, max), hashed on the lower endpoint
+    var e = checkpointed(contractLocally(
       e0.select(least(col("u"), col("v")).as("u"),
           greatest(col("u"), col("v")).as("v"))
-        .distinct())
-    def signature(df: DataFrame): (Long, Long) = {
-      // order-free, overflow-free checksum: XOR of per-edge hashes
-      // (edges are distinct, so no cancellation pairs exist)
-      val r = df.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(u, v))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var sig = signature(e)
+        .repartition(col("u"))))
+    // a single partition's contraction is the fixpoint by construction
+    var done = e.rdd.getNumPartitions == 1 || isStarForest(e)
     var round = 0
-    var stable = false
-    while (!stable && round < maxRounds) {
+    while (!done) {
+      if (round == maxRounds)
+        throw new IllegalStateException(
+          s"connectedComponentsStar did not converge in $maxRounds rounds")
       // large-star: group the SYMMETRIZED adjacency by u; neighbors
       // larger than u re-attach to min(N(u) ∪ u)
       val sym = e.select(col("u"), col("v"))
@@ -435,22 +450,65 @@ object GraphOps {
         .filter(col("n") =!= col("m"))
         .select(col("m").as("u"), col("n").as("v"))
         .distinct()
-      val next = checkpointed(small)
+      e = checkpointed(small)
       free(afterLarge)
-      val nextSig = signature(next)
-      stable = nextSig == sig
-      sig = nextSig
-      e = next
+      done = isStarForest(e)
       round += 1
     }
-    if (!stable)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxRounds rounds")
     // at the fixpoint the edge set is a star forest: (root, child)
     e.select(col("v").as("node"), col("u").as("comp"))
       .union(e.select(col("u").as("node"), col("u").as("comp")))
       .distinct()
   }
+
+  /** Union-find over each partition's canonical `(u < v)` edges: emits
+    * one `(root, node)` edge per node that is not its set's root. The
+    * root is always the set's minimum — unions hang the larger root
+    * under the smaller, by Spark's own ordering of the node type — so
+    * every output edge is canonical, and the output spans the input's
+    * components with at most as many edges (each edge merges at most
+    * two sets). A partition's output alone is a min-rooted star forest;
+    * only nodes shared across partitions leave work for the rounds. */
+  private def contractLocally(canon: DataFrame): DataFrame = {
+    val nodeType = canon.schema.head.dataType
+    canon.mapPartitions { rows =>
+      val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(nodeType)
+      val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(nodeType)
+      val index = scala.collection.mutable.HashMap.empty[Any, Int]
+      val nodes = scala.collection.mutable.ArrayBuffer.empty[Any]
+      def idOf(v: Any): Int = index.getOrElseUpdate(v, { nodes += v; nodes.length - 1 })
+      val ends = rows.flatMap(r => Iterator(idOf(r.get(0)), idOf(r.get(1)))).toArray
+      val keys = nodes.map(toInternal)
+      val parent = Array.range(0, nodes.length)
+      def find(i: Int): Int = {
+        var root = i
+        while (parent(root) != root) root = parent(root)
+        var j = i
+        while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+        root
+      }
+      for (k <- ends.indices by 2) {
+        val (a, b) = (find(ends(k)), find(ends(k + 1)))
+        if (a != b) { if (ord.lt(keys(a), keys(b))) parent(b) = a else parent(a) = b }
+      }
+      nodes.indices.iterator.filter(i => find(i) != i)
+        .map(i => Row(nodes(find(i)), nodes(i)))
+    }(org.apache.spark.sql.Encoders.row(canon.schema))
+  }
+
+  /** The star rounds' fixpoint test, one aggregate: with canonical
+    * `(u < v)` edges, every `v` in exactly one edge and no `v` also a
+    * `u` means each `v` hangs off a root that is smaller than all its
+    * leaves and touches nothing else — a min-rooted star forest, which
+    * large-star and small-star both map to itself. */
+  private def isStarForest(e: DataFrame): Boolean =
+    e.select(col("v").as("n"), lit(1).as("asV"), lit(false).as("asU"))
+      .union(e.select(col("u").as("n"), lit(0).as("asV"), lit(true).as("asU")))
+      .groupBy("n")
+      .agg(sum(col("asV")).as("nv"), max(col("asU")).as("isU"))
+      .filter(col("nv") > 1 || (col("nv") === 1 && col("isU")))
+      .isEmpty
 
   /** Fixed-iteration PageRank over a DIRECTED edge set — the classic
     * link-quality signal of web-corpus curation (host/URL ranking as a

@@ -1511,9 +1511,10 @@ object CoreQueries {
     // graph contains PATH-SHAPED chains of incidental lev-1 matches
     // (near-consecutive names within a balance band), whose diameter
     // grows with the corpus — the sf10 probe measured min-label CC
-    // failing to converge in 50 rounds (≥ 50-hop chains), while star
-    // contraction converges in O(log² n) rounds regardless of
-    // diameter. Same contract (comp = component's min node id over
+    // failing to converge in 50 rounds (≥ 50-hop chains), while a
+    // per-partition union-find plus at most O(log² n) star rounds
+    // (none when the pairs fit one partition) is bounded regardless
+    // of diameter. Same contract (comp = component's min node id over
     // the same edge set), so golden records are IDENTICAL —
     // oracle-checked at sf0.001 + sf0.01 (the oracle re-derives
     // components independently via recursive CTE).

@@ -6697,17 +6697,19 @@ object PipelineQueries {
       .orderBy("doc_id")
   }
 
-  // q432: near-dup-graph canonicalization by large-star/small-star
-  // contraction ([[graft.graph.GraphOps.connectedComponentsStar]]) —
-  // the O(log² n)-round connected components that makes million-member
-  // dup chains tractable at 100 TB (min-propagation pays one shuffle
-  // round PER HOP of component diameter; star contraction collapses a
-  // path in logarithmic rounds). The gate graph is deliberately
-  // path-shaped: chain edges (i, i+1) gated by an md5 bucket, giving
-  // hundreds of variable-length chains — the exact topology
-  // min-propagation handles worst. Isolated docs stay their own
-  // component. Oracle: recursive-CTE reachability (component = min
-  // reachable id), the q49 convention.
+  // q432: near-dup-graph canonicalization by local contraction plus
+  // large-star/small-star rounds
+  // ([[graft.graph.GraphOps.connectedComponentsStar]]) — the connected
+  // components that makes million-member dup chains tractable at
+  // 100 TB (min-propagation pays one shuffle round PER HOP of component
+  // diameter; a per-partition union-find collapses every chain inside
+  // a partition, and star rounds, O(log² n) of them at most, merge the
+  // chains that span partitions until the edges form a min-rooted star
+  // forest). The gate graph is deliberately path-shaped: chain edges
+  // (i, i+1) gated by an md5 bucket, giving hundreds of variable-length
+  // chains — the exact topology min-propagation handles worst.
+  // Isolated docs stay their own component. Oracle: recursive-CTE
+  // reachability (component = min reachable id), the q49 convention.
   def ccStarChains(s: SparkSession, dir: String): DataFrame = {
     val ids = Tables.documents(s, dir).select(col("doc_id"))
     val gated = ids
@@ -6859,9 +6861,11 @@ object PipelineQueries {
   // q436: INCREMENTAL connected components — the production shape of
   // q432: yesterday's labels are already materialized, today only new
   // edges arrive. Old components contract to supernodes (each new
-  // edge's endpoints map through the old labels), star contraction
-  // runs on that contracted graph only — work scales with the NEW
-  // edge volume plus touched components, never the full history —
+  // edge's endpoints map through the old labels), connected
+  // components (local contraction, then star rounds only if edges
+  // still span partitions) runs on that contracted graph only — work
+  // scales with the NEW edge volume plus touched components, never
+  // the full history —
   // and the final label composes node → old root → merged root.
   // Composition is exact because labels are component MINIMA: the
   // merged root is the min over supernode ids, which is the min over

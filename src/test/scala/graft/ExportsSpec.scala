@@ -535,6 +535,13 @@ class ExportsSpec extends AnyFunSuite {
       .contains("unexpected argument 'stray'"))
   }
 
+  test("cli: a repeated flag is a usage error naming it, not a silent overwrite") {
+    val e = intercept[IllegalArgumentException] {
+      ExportCli.parse(Array("concepts", "--tables", "csv:/t", "--out", "a.csv", "--out", "b.csv"))
+    }
+    assert(e.getMessage.contains("--out given more than once"))
+  }
+
   test("config: key mapping validates SAME-AS and source membership up front") {
     intercept[IllegalArgumentException] {
       ConceptsConfig(mappingTypes = Seq("NARROWER-THAN"),

@@ -172,6 +172,59 @@ class GraphPropertySpec extends AnyFunSuite {
     assert(comps(5L) == 5L && comps(6L) == 5L)
   }
 
+  test("connectedComponentsStar equals a driver union-find over seeded random graphs") {
+    /** Component minimum per node over the edges without a null
+      * endpoint or a self-loop — the nodes connectedComponentsStar keeps. */
+    def reference(es: Seq[(Any, Any)], ord: Ordering[Any]): Map[Any, Any] = {
+      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+      def find(x: Any): Any = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      es.filter { case (a, b) => a != null && b != null && a != b }.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
+    /** Random edges over `n` nodes, a shuffled path of 120 nodes above
+      * them (diameter 119), duplicated and reversed copies of some
+      * edges, self-loops, and edges with a null endpoint. */
+    def graph(rng: scala.util.Random, n: Int): Seq[(Option[Long], Option[Long])] = {
+      val random = Seq.fill(n)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
+      val path = rng.shuffle((n.toLong until n + 120L).toList)
+      val base = random ++ path.zip(path.tail)
+      val extra = rng.shuffle(base).take(20).flatMap(e => Seq(e, e.swap)) ++
+        Seq.fill(5) { val x = rng.nextInt(n).toLong; (x, x) }
+      (base ++ extra).map { case (a, b) => (Option(a), Option(b)) } ++
+        Seq((Some(rng.nextInt(n).toLong), None), (None, Some(n + 200L)), (None, None))
+    }
+    val conf = spark.conf
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = Seq(coalesceKey, "spark.sql.shuffle.partitions").map(k => k -> conf.get(k))
+    val rng = new scala.util.Random(53)
+    try {
+      for (coalesce <- Seq(true, false); parts <- Seq(1, 4, 16); strings <- Seq(false, true)) {
+        conf.set(coalesceKey, coalesce.toString)
+        conf.set("spark.sql.shuffle.partitions", parts.toString)
+        val es = graph(rng, 40 + rng.nextInt(60))
+        val (rows, ord, df) =
+          if (strings) {
+            val ss = es.map { case (a, b) => (a.map(x => s"n$x").orNull, b.map(x => s"n$x").orNull) }
+            (ss, Ordering.String.on[Any](_.asInstanceOf[String]), ss.toDF("src", "dst"))
+          } else
+            (es.map { case (a, b) => (a.getOrElse(null), b.getOrElse(null)) },
+              Ordering.Long.on[Any](_.asInstanceOf[Long]), es.toDF("src", "dst"))
+        val got = GraphOps.connectedComponentsStar(df.repartition(parts))
+          .collect().map(r => r.get(0) -> r.get(1)).toMap
+        assert(got == reference(rows, ord),
+          s"coalescing $coalesce, $parts partitions, ${if (strings) "String" else "Long"} ids: $es")
+      }
+      assert(GraphOps.connectedComponentsStar(Seq.empty[(Long, Long)].toDF("src", "dst"))
+        .collect().isEmpty, "the empty edge set has no components")
+    } finally saved.foreach { case (k, v) => conf.set(k, v) }
+  }
+
   test("pageRank: dangling mass leaks by default, is conserved with redistribution, and the flag is a no-op without dangling nodes") {
     import org.apache.spark.sql.functions.{col, sum}
     // node 4 has no out-edge: it receives rank but contributes nothing
