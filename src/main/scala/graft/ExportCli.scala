@@ -45,7 +45,12 @@ object ExportCli {
       .orElse(if (domain == "concepts") opts.get("set-name")
         .map(n => graft.functions.Naming.squishName(n) + ".csv") else None)
       .getOrElse(sys.error("--out required"))
-    def tables = resolver(spark, opts)
+    // one DataFrame per source table for the whole run: every stage that
+    // reads a table reads the same relation, so Spark reuses the exchanges
+    // two stages build over it instead of scanning and shuffling it twice
+    lazy val raw = resolver(spark, opts)
+    val resolved = scala.collection.mutable.HashMap.empty[String, DataFrame]
+    val tables: String => DataFrame = name => resolved.getOrElseUpdate(name, raw(name))
     domain match {
       case "concepts" =>
         val cfg = ConceptsConfig(

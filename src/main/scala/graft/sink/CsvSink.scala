@@ -14,7 +14,16 @@ import org.apache.commons.io.FileUtils
   * contract (Initializer loads rows top-down), so the final stage
   * serializes through one task by design — everything upstream remains
   * distributed, and the row count at this boundary is an export-sized
-  * dictionary, not the raw fact data.
+  * dictionary, not the raw fact data. Because the rows meet in one
+  * partition anyway, they are sorted there (`repartition(1)` +
+  * `sortWithinPartitions`) rather than by a global `orderBy`, whose
+  * range partitioning costs a sampling job and a shuffle per export.
+  *
+  * Dialect: RFC 4180, the one the reference's Python `csv` and the
+  * Initializer's OpenCSV read — `,` delimiter, `"` quotes, a `"` inside
+  * a value doubled (`""`), `\` an ordinary character, newlines allowed
+  * inside quoted values. [[graft.sources.CsvSource.read]] reads the same
+  * dialect.
   */
 object CsvSink {
 
@@ -49,25 +58,32 @@ object CsvSink {
       coalesce(qcol(c).cast("string"), lit("")).as(c)).toIndexedSeq: _*)
 
   /** Write `df` as ONE CSV file at `path` (header, ordered by
-    * `orderCols`), selecting `columns` in exact order. Spark writes a
-    * part-file into a staging dir; the part is moved to `path` and the
-    * staging dir (`_SUCCESS`, `.crc` files) is deleted. */
+    * `orderCols`), selecting `columns` in exact order. `orderCols` must
+    * be a unique key: the rows are sorted inside one partition, and only
+    * a unique key makes that order total.
+    *
+    * Spark writes a part file into a hidden staging dir next to `path`;
+    * the part is renamed onto `path` atomically (same directory, so the
+    * same filesystem) and the staging dir is deleted. A failed write
+    * leaves `path` as it was, never truncated. */
   def write(df: DataFrame, columns: Seq[String], orderCols: Seq[Column],
       path: String): Unit = {
-    val out = renderStrings(
-      df.orderBy(orderCols: _*).select(columns.map(qcol): _*))
-    val staging = Files.createTempDirectory("graft-csv")
+    val out = renderStrings(df.repartition(1).sortWithinPartitions(orderCols: _*)
+      .select(columns.map(qcol): _*))
+    val target = Paths.get(path).toAbsolutePath
+    Files.createDirectories(target.getParent)
+    val staging = Files.createTempDirectory(target.getParent,
+      s".${target.getFileName}.graft-csv")
     try {
       val tmp = staging.resolve("out").toString
-      out.coalesce(1).write
+      out.write
         .option("header", "true").option("emptyValue", "")
+        .option("escape", "\"")
         .mode("overwrite").csv(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
         .find(p => p.endsWith(".csv") && p.contains("part-"))
         .getOrElse(sys.error(s"no part file written under $tmp"))
-      val target = Paths.get(path)
-      Option(target.getParent).foreach(Files.createDirectories(_))
-      Files.move(Paths.get(part), target, StandardCopyOption.REPLACE_EXISTING)
+      Files.move(Paths.get(part), target, StandardCopyOption.ATOMIC_MOVE)
     } finally FileUtils.deleteDirectory(staging.toFile)
   }
 }

@@ -8,8 +8,11 @@ import org.apache.spark.sql.functions._
   * concepts-CSV input (`util/src/concept_set_csv_creator.py:51-52`). */
 object CsvSource {
 
+  /** A header CSV in the dialect [[graft.sink.CsvSink]] writes (RFC 4180:
+    * `""` is a quote inside a quoted value, quoted values may span lines). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+    spark.read.option("header", "true").option("escape", "\"")
+      .option("multiLine", "true").csv(path)
 
   /** Distinct exclude keys from one or more exclude CSVs (each must
     * contain the key column). Deduped across files (A5). */
