@@ -29,9 +29,12 @@ object ExportCli {
 
   def main(args: Array[String]): Unit = {
     val (domain, opts) = parse(args)
+    // shuffle partitions match `local[*]`'s threads unless SPARK_GRAFT_CPUS
+    // says otherwise, as in GraftSession.local
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
     val spark = GraftSession.builder(s"graft-export-$domain",
-        sys.env.getOrElse("SPARK_MASTER", "local[*]"),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+        sys.env.getOrElse("SPARK_MASTER", "local[*]"), cpus)
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, domain, opts) finally spark.stop()

@@ -1,6 +1,6 @@
 package graft.exports
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.ConceptsConfig
 import graft.functions.{MysqlFunctions => M}
@@ -253,22 +253,18 @@ object ConceptsExport {
   }
 
   /** Dynamic-schema CSV write of (possibly exclude-filtered) pipeline
-    * rows: empty-column pruning, fixed column order, `Void/Retire`
-    * forced empty, single ordered file (S5/R4/P10). */
+    * rows: fixed column order, `Void/Retire` forced empty, single ordered
+    * file (S5/R4/P10). The pipeline runs once, into one collect; the
+    * columns empty (null ≡ "") in every row are then found on the
+    * collected rows and not written (A6/R4), except `Void/Retire`. */
   def writeOrdered(pipelineRows: DataFrame, cfg: ConceptsConfig,
       outPath: String): Unit = {
-    // materialize once: pruneEmptyColumns' discovery aggregate AND the
-    // ordered write both consume these rows — without the checkpoint
-    // the topo-join plan executes twice (dictionary-sized frame; the
-    // one-task ordered write downstream is the product contract)
     val rows = pipelineRows.withColumn("Void/Retire", lit(null).cast("string"))
-      .localCheckpoint()
     val cols = orderedColumns(rows, cfg)
-    val kept = CsvSink.pruneEmptyColumns(
-      rows.select((cols.map(qcol) ++ Seq(col("__ord"), col("__tie"))): _*),
-      alwaysKeep = Set("Void/Retire", "__ord", "__tie"))
-    CsvSink.write(kept,
-      kept.columns.filterNot(_.startsWith("__")).toSeq,
-      Seq(col("__ord"), col("__tie")), outPath)
+    val values = CsvSink.collectStrings(rows, cols, Seq(col("__ord"), col("__tie")))
+    val kept = cols.indices.filter(i => cols(i) == "Void/Retire" ||
+      values.exists(r => !r.isNullAt(i) && r.getString(i).nonEmpty))
+    CsvSink.writeRows(kept.map(cols),
+      values.map(r => Row.fromSeq(kept.map(r.get))), outPath)
   }
 }

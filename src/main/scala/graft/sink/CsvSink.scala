@@ -1,9 +1,10 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.commons.io.FileUtils
+import java.io.Writer
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 /** Ordered single-file CSV sink with the Initializer header contract
   * (S5/R3/R4/A6/P10 — `concepts/src/concept_csv_export.py:183-190,607-629`;
@@ -11,19 +12,28 @@ import org.apache.commons.io.FileUtils
   *
   * Internals keep real nulls; `""` rendering happens only here at the
   * boundary (SURVEY §7.4.3). The single ordered file is a product
-  * contract (Initializer loads rows top-down), so the final stage
-  * serializes through one task by design — everything upstream remains
-  * distributed, and the row count at this boundary is an export-sized
-  * dictionary, not the raw fact data. Because the rows meet in one
-  * partition anyway, they are sorted there (`repartition(1)` +
-  * `sortWithinPartitions`) rather than by a global `orderBy`, whose
-  * range partitioning costs a sampling job and a shuffle per export.
+  * contract (Initializer loads rows top-down), and every export is a
+  * dictionary, not the raw fact data. So the rows are handled as what
+  * they are, small data: sorted inside one partition (`coalesce(1)` +
+  * `sortWithinPartitions`, no exchange and no sampling job), rendered as
+  * strings by Spark's own cast in the same projection (numbers and
+  * booleans print as Spark prints them), collected once, and written by
+  * the driver — as the reference does with Python's `csv` over its
+  * result rows. The driver holds one export's rows at a time, so its
+  * heap bounds the export size.
   *
   * Dialect: RFC 4180, the one the reference's Python `csv` and the
-  * Initializer's OpenCSV read — `,` delimiter, `"` quotes, a `"` inside
-  * a value doubled (`""`), `\` an ordinary character, newlines allowed
-  * inside quoted values. [[graft.sources.CsvSource.read]] reads the same
-  * dialect.
+  * Initializer's OpenCSV read — `,` delimiter, LF record ends, a value
+  * quoted only when it holds `,`, `"`, CR or LF, a `"` inside it
+  * doubled (`""`), `\` an ordinary character. A value is written as it
+  * is: no whitespace is trimmed at either end. Null and `""` are both
+  * written as an empty field. [[graft.sources.CsvSource.read]] reads the
+  * same dialect.
+  *
+  * The file is written beside the target under a hidden temporary name
+  * and renamed onto it atomically (same directory, so the same
+  * filesystem); the temporary file is deleted if anything fails. A
+  * failed write leaves `path` as it was, never truncated.
   */
 object CsvSink {
 
@@ -33,57 +43,46 @@ object CsvSink {
     * dynamic column names. */
   def qcol(name: String): Column = col(s"`$name`")
 
-  /** A6/R4: drop columns whose value is empty (null ≡ "") in EVERY row,
-    * except those in `alwaysKeep`. One aggregate pass over all columns —
-    * the data-dependent schema discovery SURVEY §1.3.3 requires. */
-  def pruneEmptyColumns(df: DataFrame, alwaysKeep: Set[String]): DataFrame = {
-    val candidates = df.columns.filterNot(alwaysKeep)
-    if (candidates.isEmpty) return df
-    // coalesce: max over ZERO rows is null — an empty input must write
-    // a header-only CSV (all candidates pruned), not NPE on getInt.
-    val probes: Seq[Column] = candidates.toSeq.map(c =>
-      coalesce(max(when(qcol(c).isNotNull && length(qcol(c).cast("string")) > 0, 1)
-        .otherwise(0)), lit(0)).as(c))
-    val row = df.agg(probes.head, probes.tail: _*).head()
-    val empty = candidates.zipWithIndex.collect {
-      case (c, i) if row.getInt(i) == 0 => c
-    }.toSet
-    df.select(df.columns.filterNot(empty).map(qcol).toIndexedSeq: _*)
-  }
+  /** The rows of `df`, sorted by `orderCols` inside one partition, with
+    * `columns` in exact order, each cast to string by Spark (null stays
+    * null), collected on the driver. `orderCols` must be a unique key:
+    * only a unique key makes the order total. */
+  def collectStrings(df: DataFrame, columns: Seq[String], orderCols: Seq[Column]): Array[Row] =
+    df.coalesce(1).sortWithinPartitions(orderCols: _*)
+      .select(columns.map(c => qcol(c).cast("string").as(c)): _*)
+      .collect()
 
-  /** Render every column as string with null → "" (the reference's CSV
-    * boundary behavior; internally nulls stay real). */
-  def renderStrings(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c =>
-      coalesce(qcol(c).cast("string"), lit("")).as(c)).toIndexedSeq: _*)
-
-  /** Write `df` as ONE CSV file at `path` (header, ordered by
-    * `orderCols`), selecting `columns` in exact order. `orderCols` must
-    * be a unique key: the rows are sorted inside one partition, and only
-    * a unique key makes that order total.
-    *
-    * Spark writes a part file into a hidden staging dir next to `path`;
-    * the part is renamed onto `path` atomically (same directory, so the
-    * same filesystem) and the staging dir is deleted. A failed write
-    * leaves `path` as it was, never truncated. */
+  /** Write `df` as ONE CSV file at `path` (header, ordered by the unique
+    * key `orderCols`), selecting `columns` in exact order. */
   def write(df: DataFrame, columns: Seq[String], orderCols: Seq[Column],
-      path: String): Unit = {
-    val out = renderStrings(df.repartition(1).sortWithinPartitions(orderCols: _*)
-      .select(columns.map(qcol): _*))
+      path: String): Unit =
+    writeRows(columns, collectStrings(df, columns, orderCols), path)
+
+  /** Write `header` and then `rows` (string fields, in header order) as
+    * one RFC 4180 file at `path`, replacing it atomically. */
+  def writeRows(header: Seq[String], rows: Array[Row], path: String): Unit = {
     val target = Paths.get(path).toAbsolutePath
     Files.createDirectories(target.getParent)
-    val staging = Files.createTempDirectory(target.getParent,
-      s".${target.getFileName}.graft-csv")
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
     try {
-      val tmp = staging.resolve("out").toString
-      out.write
-        .option("header", "true").option("emptyValue", "")
-        .option("escape", "\"")
-        .mode("overwrite").csv(tmp)
-      val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-        .find(p => p.endsWith(".csv") && p.contains("part-"))
-        .getOrElse(sys.error(s"no part file written under $tmp"))
-      Files.move(Paths.get(part), target, StandardCopyOption.ATOMIC_MOVE)
-    } finally FileUtils.deleteDirectory(staging.toFile)
+      val out = Files.newBufferedWriter(tmp, UTF_8, StandardOpenOption.CREATE_NEW)
+      try {
+        record(out, header)
+        rows.foreach(r => record(out, header.indices.map(r.getString)))
+      } finally out.close()
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
+
+  private def record(out: Writer, fields: Seq[String]): Unit = {
+    out.write(fields.map(field).mkString(","))
+    out.write('\n')
+  }
+
+  private def field(v: String): String =
+    if (v == null) ""
+    else if (v.exists(c => c == ',' || c == '"' || c == '\r' || c == '\n'))
+      "\"" + v.replace("\"", "\"\"") + "\""
+    else v
 }

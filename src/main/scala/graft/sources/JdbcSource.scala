@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.{BaseRelation, Filter, PrunedFilteredScan}
+import org.apache.spark.sql.types.StructType
 import java.io.FileInputStream
 import java.util.Properties
 
@@ -70,9 +74,51 @@ object JdbcSource {
     }
   }
 
-  /** Table resolver for the export pipelines. */
-  def resolver(spark: SparkSession, cfg: JdbcConfig): String => DataFrame =
-    name => table(spark, cfg, name)
+  /** Table resolver for the export pipelines: [[table]], with a size
+    * estimate of `COUNT(*)` rows × the schema's `defaultSize`.
+    *
+    * A JDBC relation reports no size, so Spark takes every export table
+    * for a large one and plans its joins as sort-merge joins; AQE then
+    * shuffles both sides before it sees the sizes and rewrites each join
+    * to a broadcast. With the estimate, Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold` chooses when it plans: a
+    * dictionary table is broadcast at once, and a table above the
+    * threshold still gets a shuffle join. That is why it is an estimate
+    * and not a broadcast hint, which would broadcast a table of any
+    * size. The count runs over a plain JDBC connection, not as a Spark
+    * job. [[table]] and [[tableAutoPartitioned]] stay unsized; their
+    * other callers may read fact-sized tables. */
+  def resolver(spark: SparkSession, cfg: JdbcConfig): String => DataFrame = name => {
+    val rel = table(spark, cfg, name).queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case scan: BaseRelation with PrunedFilteredScan => scan
+      }
+    }
+    spark.baseRelationToDataFrame(
+      SizedRelation(rel, rowCount(cfg, name) * rel.schema.defaultSize))
+  }
+
+  private def rowCount(cfg: JdbcConfig, name: String): Long = {
+    val conn = java.sql.DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
+    try {
+      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $name")
+      rs.next()
+      rs.getLong(1)
+    } finally conn.close()
+  }
+
+  /** `rel` with `sizeInBytes`; scans, pruning and pushdown are `rel`'s. */
+  private final case class SizedRelation(rel: BaseRelation with PrunedFilteredScan,
+      override val sizeInBytes: Long) extends BaseRelation with PrunedFilteredScan {
+    def sqlContext: SQLContext = rel.sqlContext
+    def schema: StructType = rel.schema
+    override def needConversion: Boolean = rel.needConversion
+    override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
+      rel.unhandledFilters(filters)
+    def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] =
+      rel.buildScan(requiredColumns, filters)
+    override def toString: String = rel.toString
+  }
 
   /** S3: extract connection.username / connection.password from an
     * openmrs-runtime.properties file (the reference greps them —
