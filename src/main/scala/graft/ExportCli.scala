@@ -14,7 +14,7 @@ import graft.sources.{CsvSource, JdbcSource, JdbcConfig}
   *   ExportCli concepts   --tables <src> --out <csv> [--locales en,es]
   *       [--name-types full,short] [--mapping-types SAME-AS,...]
   *       [--sources PIH|Name,...] [--version 2.3] [--key-mapping SRC]
-  *       [--set-name NAME] [--exclude-files a.csv,b.csv]
+  *       [--set-name NAME] [--exclude-files a.csv,b.csv] [--limit N]
   *       (--out defaults to <set-name-with-dashes>.csv when --set-name
   *        is given)
   *   ExportCli locations  --tables <src> --out <csv>
@@ -24,6 +24,7 @@ import graft.sources.{CsvSource, JdbcSource, JdbcConfig}
   * `<src>` selects the ingress: `parquet:<dir>` (one <table>.parquet per
   * table), `csv:<dir>` (one <table>.csv, header + inferred schema), or
   * `jdbc:<url>` with `--user/--password` or `--props <runtime.properties>`.
+  * An option the domain does not read is an error naming it.
   */
 object ExportCli {
 
@@ -40,7 +41,24 @@ object ExportCli {
     try run(spark, domain, opts) finally spark.stop()
   }
 
+  /** The options each domain reads; `run` rejects any other. */
+  private val TableOptions = Set("tables", "user", "password", "props", "out")
+  private val DomainOptions: Map[String, Set[String]] = Map(
+    "concepts" -> (TableOptions ++ Set("locales", "name-types", "mapping-types",
+      "sources", "version", "key-mapping", "set-name", "limit", "exclude-files")),
+    "locations" -> TableOptions,
+    "ordertypes" -> TableOptions,
+    "conceptset" -> Set("in", "out"))
+
   def run(spark: SparkSession, domain: String, opts: Map[String, String]): Unit = {
+    val allowed = DomainOptions.getOrElse(domain, sys.error(s"unknown domain '$domain' " +
+      "(expected concepts|locations|ordertypes|conceptset)"))
+    opts.keys.toSeq.sorted.find(!allowed(_)).foreach { k =>
+      throw new IllegalArgumentException(s"--$k is not an option of the $domain " +
+        s"export (expected one of ${allowed.toSeq.sorted.map("--" + _).mkString(", ")})")
+    }
+    val limit = opts.get("limit").map(v => v.toIntOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(s"--limit must be a non-negative integer, got '$v'")))
     // default output name: derived from the set name with spaces
     // squished to dashes (P8, concept_csv_export.py:594-596) when
     // --out is omitted on a concepts --set-name export
@@ -48,12 +66,7 @@ object ExportCli {
       .orElse(if (domain == "concepts") opts.get("set-name")
         .map(n => graft.functions.Naming.squishName(n) + ".csv") else None)
       .getOrElse(sys.error("--out required"))
-    // one DataFrame per source table for the whole run: every stage that
-    // reads a table reads the same relation, so Spark reuses the exchanges
-    // two stages build over it instead of scanning and shuffling it twice
-    lazy val raw = resolver(spark, opts)
-    val resolved = scala.collection.mutable.HashMap.empty[String, DataFrame]
-    val tables: String => DataFrame = name => resolved.getOrElseUpdate(name, raw(name))
+    lazy val tables = resolver(spark, opts)
     domain match {
       case "concepts" =>
         val cfg = ConceptsConfig(
@@ -68,7 +81,7 @@ object ExportCli {
           version = opts.getOrElse("version", "2.3"),
           conceptKeyMapping = opts.get("key-mapping"),
           setName = opts.get("set-name"),
-          limit = opts.get("limit").map(_.toInt))
+          limit = limit)
         val warnings = ConceptsExport.stopCharacterScan(tables, cfg).collect()
         if (warnings.nonEmpty) {
           System.err.println(
@@ -87,27 +100,33 @@ object ExportCli {
       case "conceptset" =>
         val in = opts.getOrElse("in", sys.error("--in required"))
         ConceptSetCreator.export(CsvSource.read(spark, in), out)
-      case other => sys.error(s"unknown domain '$other' " +
-        "(expected concepts|locations|ordertypes|conceptset)")
     }
     println(s"wrote $out")
   }
 
-  /** Table resolver from the --tables spec. */
+  /** Table resolver from the --tables spec. It resolves each table
+    * once: every stage that reads a table reads the same DataFrame, so
+    * Spark reuses the exchanges two stages build over it instead of
+    * scanning and shuffling it twice. */
   def resolver(spark: SparkSession, opts: Map[String, String]): String => DataFrame = {
     val spec = opts.getOrElse("tables", sys.error("--tables required"))
+    def oncePerTable(read: String => DataFrame): String => DataFrame = {
+      val resolved = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+      name => resolved.getOrElseUpdate(name, read(name))
+    }
     spec.split(":", 2) match {
       case Array("parquet", dir) =>
-        name => spark.read.parquet(s"$dir/$name.parquet")
+        oncePerTable(name => spark.read.parquet(s"$dir/$name.parquet"))
       case Array("csv", dir) =>
-        name => spark.read.option("header", "true")
-          .option("inferSchema", "true").csv(s"$dir/$name.csv")
+        oncePerTable(name => spark.read.option("header", "true")
+          .option("inferSchema", "true").csv(s"$dir/$name.csv"))
       case Array("jdbc", url) =>
         val (user, pass) = (opts.get("user"), opts.get("password")) match {
           case (Some(u), Some(p)) => (u, p)
           case _ => JdbcSource.credentials(opts.getOrElse("props",
             sys.error("--user/--password or --props required for jdbc")))
         }
+        // resolves each table once itself
         JdbcSource.resolver(spark, JdbcConfig(s"jdbc:$url", user, pass))
       case _ => sys.error(s"bad --tables spec '$spec' " +
         "(expected parquet:<dir>, csv:<dir>, or jdbc:<url>)")

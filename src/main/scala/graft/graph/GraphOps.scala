@@ -12,25 +12,25 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   *
   * Design (SURVEY §2.6): edges live in a `DataFrame(src, dst)`. Two
   * execution shapes:
-  *  - Driver-side: [[detectCycles]] and [[topoOrder]] collect the edge
-  *    frame once and peel it on the driver; one rooted [[topoOrder]] is
+  *  - Driver-side: every DAG question — [[topoDepth]] (O4),
+  *    [[bfsClosure]] (G1), [[findCycleNodes]] and [[detectCycles]] (G2)
+  *    and [[topoOrder]] — is answered by one sink peel over one collect
+  *    of the edge frame (see [[peelSinks]]); one rooted [[topoOrder]] is
   *    the concepts export's whole graph stage (G1 closure, G2 guard, O4
   *    depth). Driver memory is bounded by the edge count, and a
   *    concepts export's edges are bounded by the dictionary's set and
   *    answer links (tens of thousands per dictionary) — the reference
   *    holds the same graph in a Python dict, and the single-file CSV
   *    sink already passes every exported row through one task.
-  *  - Distributed: everything else, including [[topoDepth]],
-  *    [[findCycleNodes]] and [[bfsClosure]] for hierarchies of
-  *    unbounded size, is a driver-orchestrated iterative DataFrame
-  *    fixpoint. Each iteration `localCheckpoint()`s to cut lineage
-  *    (SURVEY §7.4.4) — without it the plan doubles per iteration and
-  *    Catalyst analysis time explodes. At cluster scale the
-  *    per-iteration shuffle is hash-partitioned on the join key, and
-  *    iteration count is bounded by graph diameter, not node count.
-  *    [[connectedComponentsStar]] first contracts every partition with
-  *    a union-find (Łącki et al., arXiv:1807.10727) and stops at the
-  *    first min-rooted star forest: an edge set small enough for AQE to
+  *  - Distributed: everything else is a driver-orchestrated iterative
+  *    DataFrame fixpoint. Each iteration `localCheckpoint()`s to cut
+  *    lineage (SURVEY §7.4.4) — without it the plan doubles per
+  *    iteration and Catalyst analysis time explodes. At cluster scale
+  *    the per-iteration shuffle is hash-partitioned on the join key.
+  *    [[connectedComponentsStar]], the one connected-components
+  *    algorithm, first contracts every partition with a union-find
+  *    (Łącki et al., arXiv:1807.10727) and stops at the first
+  *    min-rooted star forest: an edge set small enough for AQE to
   *    coalesce into one partition is finished by that single pass, and
   *    only edges that span partitions pay star rounds.
   *
@@ -136,138 +136,42 @@ object GraphOps {
       .filter(col("a") < col("b"))
   }
 
-  /** Longest-path depth layering ("topological rank").
-    *
-    * Given edges `(src, dst)` meaning "src references dst" (dst must
-    * come first — reference semantics `concept_csv_export.py:499-530`),
-    * returns `(node, depth)` where depth(leaf/referent-free) = 0 and
-    * depth(n) = 1 + max(depth(referenced nodes)). Sorting by depth
-    * yields an order where every referenced node precedes its referrer.
-    *
-    * Precondition: acyclic (guard with [[findCycleNodes]]); maxIter
-    * bounds runaway iteration on unexpected cycles.
-    */
-  def topoDepth(edges: DataFrame, maxIter: Int = 100): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.toDF("src", "dst").cache()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var depth = checkpointed(nodes.withColumn("depth", lit(0)))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // candidate depth for each src = 1 + max depth of its dsts. The
-      // change flag rides in the checkpointed frame so convergence is a
-      // trivial filter-count on materialized rows — not a second
-      // old-vs-new join job per iteration.
-      val cand = e.join(depth, e("dst") === depth("node"))
-        .groupBy(col("src").as("node2"))
-        .agg((max(col("depth")) + 1).as("cand"))
-      val next = checkpointed(
-        depth.join(cand, depth("node") === cand("node2"), "left")
-          .select(col("node"),
-            greatest(col("depth"), coalesce(col("cand"), lit(0))).as("depth"),
-            (coalesce(col("cand"), lit(0)) > col("depth")).as("__chg")))
-      changed = next.filter(col("__chg")).count()
-      free(depth)
-      depth = next.drop("__chg")
-      iter += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"topoDepth did not converge in $maxIter iterations — graph is cyclic?")
-    e.unpersist()
-    depth
-  }
-
-  /** BFS reachability closure (G1, `concept_csv_export.py:407-438`):
-    * all nodes reachable from `roots` following `src -> dst` edges,
-    * roots included. Frontier-join loop with visited-set anti-join;
-    * iterations = eccentricity of the root set.
-    */
-  def bfsClosure(edges: DataFrame, roots: DataFrame): DataFrame = {
-    val e = edges.toDF("src", "dst").cache()
-    var visited = checkpointed(roots.toDF("node").distinct())
-    var frontier = visited
-    var frontierCount = frontier.count()
-    while (frontierCount > 0) {
-      val next = e.join(frontier, e("src") === frontier("node"))
-        .select(col("dst").as("node")).distinct()
-      val prevFrontier = frontier
-      frontier = checkpointed(next.join(visited, Seq("node"), "left_anti"))
-      // initial state aliases frontier = visited; never free the alias
-      if (prevFrontier ne visited) free(prevFrontier)
-      frontierCount = frontier.count()
-      if (frontierCount > 0) {
-        val prevVisited = visited
-        visited = checkpointed(visited.union(frontier).distinct())
-        free(prevVisited)
-      }
-    }
-    if (frontier ne visited) free(frontier)
-    e.unpersist()
-    visited
-  }
-
-  /** Cycle reachability set (G2 core, `concept_csv_export.py:457-496`):
-    * iteratively peel nodes whose every outgoing edge points outside
-    * the remaining set; what remains is the set of nodes that can
-    * reach a cycle (a superset of cycle members; every remaining node
-    * has an out-edge within the set). Empty result ⇔ acyclic.
-    */
-  def findCycleNodes(edges: DataFrame): DataFrame = {
-    val e = edges.toDF("src", "dst").cache()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var remaining = checkpointed(nodes)
-    var remainingCount = remaining.count()
-    var removed = 1L
-    while (removed > 0) {
-      // keep nodes that still have an edge into the remaining set
-      val hasLiveOut = e.join(remaining.withColumnRenamed("node", "dst2"),
-          e("dst") === col("dst2"))
-        .select(col("src").as("node")).distinct()
-      val next = checkpointed(remaining.join(hasLiveOut, Seq("node"), "left_semi"))
-      val nextCount = next.count()
-      removed = remainingCount - nextCount
-      remainingCount = nextCount
-      free(remaining)
-      remaining = next
-    }
-    e.unpersist()
-    remaining
-  }
-
-  /** The driver-side sink peel behind [[detectCycles]] and
-    * [[topoOrder]]: `nodes(i)` is a node id (typed `nodeType`), `src`
+  /** The driver-side sink peel behind every DAG question here
+    * ([[topoDepth]], [[bfsClosure]], [[findCycleNodes]], [[detectCycles]]
+    * and [[topoOrder]]): `nodes(i)` is a node id (typed `nodeType`), `src`
     * and `dst` hold each edge as a pair of node indices, and `level(i)`
     * is node i's peel level — its longest-path depth — or -1 if it was
     * never peeled. */
   private final class SinkPeel(val nodeType: DataType, val nodes: Array[Any],
       val src: Array[Int], val dst: Array[Int], val level: Array[Int])
 
+  /** The type a node union of `(src, dst)` resolves to — analysis only,
+    * no job. */
+  private def nodeTypeOf(e: DataFrame): DataType =
+    e.select(col("src")).union(e.select(col("dst"))).schema.head.dataType
+
   /** Collect `(src, dst)` once (one Spark job) and peel sinks level by
     * level (Kahn over out-degrees): level 0 is every node without an
     * out-edge, level k every node whose last live out-edge pointed at
-    * level k-1, so a node's level is [[topoDepth]]'s longest-path depth.
-    * The never-peeled nodes are exactly [[findCycleNodes]]' set — the
-    * nodes that can reach a cycle. Edges with a null endpoint are
-    * dropped, as in the distributed joins, where a null never matches a
-    * node. Node ids must compare by value (strings, numbers). A `root`
-    * keeps only the edges leaving its closure (a BFS over the same
-    * collect) and is a node even without edges. */
-  private def peelSinks(edges: DataFrame, root: Option[Any] = None): SinkPeel = {
+    * level k-1, so a node's level is its longest-path depth. The
+    * never-peeled nodes are exactly the nodes that can reach a cycle.
+    * Edges with a null endpoint are dropped: a null is no node. Node ids
+    * must compare by value (strings, numbers). `roots` keep only the
+    * edges leaving their closure (a BFS over the same collect), so the
+    * peel's nodes are that closure; a root is a node even without
+    * edges. Every edge is collected, so the driver holds the whole edge
+    * set: a dictionary's set and answer links for the concepts export,
+    * about 150k edges for the q20–q22 hierarchy at sf1. */
+  private def peelSinks(edges: DataFrame, roots: Option[Iterable[Any]] = None): SinkPeel = {
     val e = edges.toDF("src", "dst")
-    // the type a node union resolves to — analysis only, no job
-    val nodeType = e.select(col("src")).union(e.select(col("dst")))
-      .schema.head.dataType
+    val nodeType = nodeTypeOf(e)
     val all = e.filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src").cast(nodeType), col("dst").cast(nodeType))
       .collect()
-    val rows = root.fold(all) { r =>
+    val rows = roots.fold(all) { rs =>
       val out = all.groupBy(_.get(0))
-      val seen = scala.collection.mutable.HashSet(r)
-      var frontier = Seq(r)
+      val seen = scala.collection.mutable.HashSet.from(rs)
+      var frontier = seen.toSeq
       while (frontier.nonEmpty) frontier = frontier
         .flatMap(out.getOrElse(_, Array.empty[Row]).map(_.get(1))).filter(seen.add)
       all.filter(row => seen(row.get(0)))
@@ -275,7 +179,7 @@ object GraphOps {
     val index = scala.collection.mutable.HashMap.empty[Any, Int]
     val nodes = scala.collection.mutable.ArrayBuffer.empty[Any]
     def idOf(v: Any): Int = index.getOrElseUpdate(v, { nodes += v; nodes.length - 1 })
-    root.foreach(idOf)
+    roots.foreach(_.foreach(idOf))
     val src = rows.map(r => idOf(r.get(0)))
     val dst = rows.map(r => idOf(r.get(1)))
     val n = nodes.length
@@ -297,6 +201,16 @@ object GraphOps {
       depth += 1
     }
     new SinkPeel(nodeType, nodes.toArray, src, dst, level)
+  }
+
+  /** The peel as a local `(node, depth)` frame, depth -1 for the nodes
+    * never peeled — no job to build, broadcast as is when joined. */
+  private def depthFrame(spark: SparkSession, p: SinkPeel): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      p.nodes.indices.map(i => Row(p.nodes(i), p.level(i))).asJava,
+      StructType(Seq(StructField("node", p.nodeType, nullable = false),
+        StructField("depth", IntegerType, nullable = false))))
   }
 
   /** Cyclic node count above which the cycle message omits the witness. */
@@ -332,54 +246,48 @@ object GraphOps {
     * `CycleException` whose message contains an `a --> b --> a` path,
     * mirroring the reference's error contract
     * (`concept_csv_export.py:490-496`). Runs on the driver over one
-    * collect of the edges (see [[peelSinks]]); the distributed
-    * [[findCycleNodes]] gives the same verdict. */
+    * collect of the edges (see [[peelSinks]]); [[findCycleNodes]] lists
+    * the nodes behind the same verdict. */
   def detectCycles(edges: DataFrame, witnessLimit: Int = WitnessLimit): Unit =
     failOnCycle(peelSinks(edges), witnessLimit)
 
-  /** Connected components over an UNDIRECTED edge set (the edges are
-    * symmetrized internally): returns `(node, comp)` where comp is the
-    * minimum node id reachable from `node`. Min-label propagation —
-    * each iteration takes the min of a node's label and its neighbors'
-    * labels — converges in O(component diameter) iterations with a
-    * checkpoint per step. The dedup use case: near-dup PAIRS →
-    * duplicate GROUPS with a canonical representative (keep min,
-    * drop the rest). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val e0 = edges.toDF("a", "b")
-    val e = e0.union(e0.select(col("b"), col("a"))).distinct().cache()
-    val nodes = e.select(col("a").as("node")).distinct()
-    var labels = checkpointed(nodes.withColumn("comp", col("node")))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // change flag computed in-flight (see topoDepth): one job per
-      // iteration, convergence read off the checkpoint
-      val neighborMin = e.join(labels, e("b") === labels("node"))
-        .groupBy(col("a").as("node2"))
-        .agg(min(col("comp")).as("nmin"))
-      val next = checkpointed(
-        labels.join(neighborMin, labels("node") === col("node2"), "left")
-          .select(col("node"),
-            least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
-            (coalesce(col("nmin"), col("comp")) < col("comp")).as("__chg")))
-      changed = next.filter(col("__chg")).count()
-      free(labels)
-      labels = next.drop("__chg")
-      iter += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations")
-    e.unpersist()
-    labels
+  /** Longest-path depth layering ("topological rank", O4): given edges
+    * `(src, dst)` meaning "src references dst" (dst must come first —
+    * reference semantics `concept_csv_export.py:499-530`), returns
+    * `(node, depth)` for every edge endpoint, where depth = 0 for a node
+    * without out-edges and 1 + max(depth of its referents) otherwise.
+    * A view over one [[peelSinks]]; cyclic edges raise [[detectCycles]]'
+    * `CycleException`. */
+  def topoDepth(edges: DataFrame): DataFrame = {
+    val p = peelSinks(edges)
+    failOnCycle(p, WitnessLimit)
+    depthFrame(edges.sparkSession, p)
   }
+
+  /** BFS reachability closure (G1, `concept_csv_export.py:407-438`):
+    * `(node)` for every node reachable from the one-column frame `roots`
+    * following `src -> dst` edges, roots included. A view over a rooted
+    * [[peelSinks]] (the roots are collected); a cycle in the closure
+    * does not raise. */
+  def bfsClosure(edges: DataFrame, roots: DataFrame): DataFrame = {
+    val rootType = nodeTypeOf(edges.toDF("src", "dst"))
+    val rs = roots.toDF("node").select(col("node").cast(rootType)).collect()
+      .flatMap(r => Option(r.get(0)))
+    depthFrame(edges.sparkSession, peelSinks(edges, Some(rs))).select("node")
+  }
+
+  /** Cycle reachability set (G2 core, `concept_csv_export.py:457-496`):
+    * `(node)` for every node that can reach a cycle — the nodes
+    * [[peelSinks]] never peels, a superset of cycle members. Empty ⇔
+    * acyclic. */
+  def findCycleNodes(edges: DataFrame): DataFrame =
+    depthFrame(edges.sparkSession, peelSinks(edges))
+      .filter(col("depth") < 0).select("node")
 
   /** Connected components by local contraction followed by alternating
     * large-star / small-star rounds (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) — the 100 TB-scale
-    * alternative to [[connectedComponents]]'s min-label propagation.
-    * Min-propagation needs O(diameter) rounds, which on path-shaped
+    * Components in MapReduce and Beyond", SoCC'14). Min-label
+    * propagation would need O(diameter) rounds, which on path-shaped
     * similarity chains (dedup graphs routinely contain them) means
     * thousands of shuffles; star contraction converges in O(log² n)
     * rounds REGARDLESS of diameter, each round two groupBy-shuffles on
@@ -405,9 +313,8 @@ object GraphOps {
     * every round — the rounds leave such a forest unchanged, so no
     * round is spent confirming it. A one-partition contraction is such
     * a forest by construction and skips the test. Returns
-    * `(node, comp)` with comp = the component's minimum node id, same
-    * contract as [[connectedComponents]] — nodes that appear in `edges`
-    * only; callers union isolated nodes themselves. Self-loops and
+    * `(node, comp)` with comp = the component's minimum node id, for
+    * the nodes that appear in `edges` only; callers union isolated nodes themselves. Self-loops and
     * edges with a null endpoint are dropped; the input need not be
     * symmetrized. */
   def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
@@ -814,19 +721,16 @@ object GraphOps {
     * `test_concept_csv_export.py:33-51`). Depths come from one driver-
     * side peel (see [[peelSinks]]) and join onto `df` as a broadcast
     * local frame; cyclic edges raise [[detectCycles]]' `CycleException`.
-    * With a `root` (G1 tree filter) only the root's [[bfsClosure]] is
-    * peeled, so a cycle outside it passes, and the depths join `inner`:
-    * the closure's rows remain, the root's even without edges.
+    * With a `root` (G1 tree filter) only the root's closure (the rows
+    * [[bfsClosure]] lists) is peeled, so a cycle outside it passes, and
+    * the depths join `inner`: the closure's rows remain, the root's even
+    * without edges.
     */
   def topoOrder(df: DataFrame, keyCol: String, edges: DataFrame,
       root: Option[Any] = None): DataFrame = {
-    val p = peelSinks(edges, root)
+    val p = peelSinks(edges, root.map(Seq(_)))
     failOnCycle(p, WitnessLimit)
-    import scala.jdk.CollectionConverters._
-    val depth = df.sparkSession.createDataFrame(
-      p.nodes.indices.map(i => Row(p.nodes(i), p.level(i))).asJava,
-      StructType(Seq(StructField("__node", p.nodeType, nullable = false),
-        StructField("depth", IntegerType, nullable = false))))
+    val depth = depthFrame(df.sparkSession, p).toDF("__node", "depth")
     df.join(broadcast(depth), df(keyCol) === col("__node"),
         if (root.isDefined) "inner" else "left")
       .drop("__node")

@@ -1495,7 +1495,7 @@ object CoreQueries {
   // (nation, segment, ⌊acctbal/2⌋ ± adjacent) bounds the pair space
   // to the |Δbal| ≤ 2 band, the match rule
   // (levenshtein ≤ 1 ∧ |Δbal| ≤ 2) runs only inside blocks,
-  // [[graft.graph.GraphOps.connectedComponents]] closes match chains,
+  // [[graft.graph.GraphOps.connectedComponentsStar]] closes match chains,
   // and [[MergeOps.goldenRecord]] applies the pinned survivorship
   // policy. The engine does NOT use the planting arithmetic — the
   // oracle independently re-runs blocking+matching+components (the
@@ -1545,7 +1545,7 @@ object CoreQueries {
   /** q223's candidate-pair stage, exposed package-private so the plan
     * evidence (plans/r16/q223_pairs_after.txt) can be dumped — the
     * final query's explain cannot show it: it executes inside the
-    * connectedComponents fixpoint behind a checkpoint boundary. */
+    * connectedComponentsStar fixpoint behind a checkpoint boundary. */
   private[graft] def goldenRecordPairs(recs: DataFrame): DataFrame = {
     val left = recs.select(col("c_custkey").as("id_a"),
       col("c_name").as("na"), col("c_nationkey"), col("c_mktsegment"),

@@ -56,13 +56,14 @@ object PipelineQueries {
     })
 
   /** Shared connected components over [[nearDupPairs]] — q49 reports
-    * them, q55 drops the non-canonical members; the min-label fixpoint
-    * (an iterative multi-job computation) runs once per (session, dir). */
+    * them, q55 drops the non-canonical members; the star-contraction
+    * fixpoint (an iterative multi-job computation) runs once per
+    * (session, dir). */
   private val ccStage =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def dupComponents(s: SparkSession, dir: String): DataFrame =
     ccStage.getOrElseUpdate((s, dir),
-      graft.graph.GraphOps.connectedComponents(
+      graft.graph.GraphOps.connectedComponentsStar(
           nearDupPairs(s, dir).select("id_a", "id_b"))
         .localCheckpoint())
 
@@ -2604,7 +2605,7 @@ object PipelineQueries {
   def substringKeep(s: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("group_id").orderBy(col("keep_chars").desc, col("keep_id"))
-    graft.graph.GraphOps.connectedComponents(
+    graft.graph.GraphOps.connectedComponentsStar(
         winPairs(s, dir).select("id_a", "id_b"))
       .select(col("node").as("keep_id"), col("comp").as("group_id"))
       .join(Tables.documents(s, dir)

@@ -649,7 +649,7 @@ object Similarity {
     * hash-blocked recall instead). Because init/means are md5-derived
     * and 6-dp-quantized like q53, the whole pipeline — fit, assignment,
     * in-cell pairs, cosines — unrolls into an exact SQL oracle.
-    * Downstream: feed the pairs to `GraphOps.connectedComponents` and
+    * Downstream: feed the pairs to `GraphOps.connectedComponentsStar` and
     * keep each component's min id, as q55 does with MinHash pairs. */
   def semanticNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nlist: Int = 16, dim: Int = 64, seed: Long = 42L,

@@ -87,15 +87,23 @@ object JdbcSource {
     * and not a broadcast hint, which would broadcast a table of any
     * size. The count runs over a plain JDBC connection, not as a Spark
     * job. [[table]] and [[tableAutoPartitioned]] stay unsized; their
-    * other callers may read fact-sized tables. */
-  def resolver(spark: SparkSession, cfg: JdbcConfig): String => DataFrame = name => {
-    val rel = table(spark, cfg, name).queryExecution.analyzed match {
-      case l: LogicalRelation => l.relation match {
-        case scan: BaseRelation with PrunedFilteredScan => scan
+    * other callers may read fact-sized tables.
+    *
+    * Each table is resolved once per resolver: every later call of a
+    * name returns the same DataFrame, so the schema load and the count
+    * run once, and stages that read one table read one relation, whose
+    * exchanges Spark can reuse. */
+  def resolver(spark: SparkSession, cfg: JdbcConfig): String => DataFrame = {
+    val resolved = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    name => resolved.getOrElseUpdate(name, {
+      val rel = table(spark, cfg, name).queryExecution.analyzed match {
+        case l: LogicalRelation => l.relation match {
+          case scan: BaseRelation with PrunedFilteredScan => scan
+        }
       }
-    }
-    spark.baseRelationToDataFrame(
-      SizedRelation(rel, rowCount(cfg, name) * rel.schema.defaultSize))
+      spark.baseRelationToDataFrame(
+        SizedRelation(rel, rowCount(cfg, name) * rel.schema.defaultSize))
+    })
   }
 
   private def rowCount(cfg: JdbcConfig, name: String): Long = {

@@ -683,6 +683,14 @@ class ExportsSpec extends AnyFunSuite {
     } finally spark.conf.set(key, saved)
   }
 
+  test("jdbc resolver: a table resolves once per resolver, to the same DataFrame") {
+    val resolver = JdbcSource.resolver(spark,
+      JdbcConfig(fixtureDb("tables"), user = "", password = ""))
+    val names = resolver("concept_name")
+    assert(resolver("concept_name") eq names)
+    assert(resolver("concept") ne names)
+  }
+
   test("concepts: key-remap guard materializes the wide plan once (checkpoint-backed)") {
     val noComplex: String => org.apache.spark.sql.DataFrame = {
       case "concept" => concept.filter(col("concept_id") =!= 7)
@@ -736,6 +744,24 @@ class ExportsSpec extends AnyFunSuite {
       .contains("missing value for --set-name"))
     assert(usageError("concepts", "--out", "x.csv", "stray")
       .contains("unexpected argument 'stray'"))
+  }
+
+  test("cli: an option the domain does not read, or a bad --limit, fails naming it before any work") {
+    val dir = Files.createTempDirectory("graft-cli-opts")
+    val base = Map("tables" -> s"csv:${dir.resolve("absent")}", "out" -> dir.resolve("x.csv").toString)
+    def rejected(domain: String, opts: Map[String, String]): String =
+      intercept[IllegalArgumentException](ExportCli.run(spark, domain, opts)).getMessage
+    assert(rejected("concepts", base + ("set_name" -> "Vital signs"))
+      .startsWith("--set_name is not an option of the concepts export"))
+    assert(rejected("concepts", base + ("locale" -> "es")).contains("--locale "))
+    assert(rejected("locations", base + ("locales" -> "en,es")).contains("--locales "))
+    assert(rejected("ordertypes", base + ("set-name" -> "X")).contains("--set-name "))
+    assert(rejected("conceptset", base + ("in" -> "c.csv")).contains("--tables "))
+    Seq("-1", "ten", "1.5").foreach { v =>
+      assert(rejected("concepts", base + ("limit" -> v)) ==
+        s"--limit must be a non-negative integer, got '$v'")
+    }
+    assert(!Files.exists(dir.resolve("x.csv")))
   }
 
   test("cli: a repeated flag is a usage error naming it, not a silent overwrite") {

@@ -105,11 +105,13 @@ class GraphOpsSpec extends AnyFunSuite {
     val ord = GraphOps.topoOrder(Seq("a", "b", "c").toDF("key"), "key", edges)
       .as[(String, Int)].collect().toMap
     assert(ord == Map("a" -> 0, "b" -> 0, "c" -> 1))
-    // the distributed fixpoints agree
+    // the views of the same peel: b sits only on a null edge, so it is no
+    // node (topoOrder's left join gave it the default 0 above)
     assert(GraphOps.findCycleNodes(edges).count() == 0)
-    val depth = GraphOps.topoDepth(edges).filter(col("node").isNotNull)
-      .as[(String, Int)].collect().toMap
-    assert(depth == ord)
+    val depth = GraphOps.topoDepth(edges).as[(String, Int)].collect().toMap
+    assert(depth == Map("a" -> 0, "c" -> 1))
+    assert(GraphOps.bfsClosure(edges, Seq("c").toDF("node")).as[String].collect().toSet ==
+      Set("c", "a"))
   }
 
   test("integration: tree-filter, cycle-check, reorder, exclude => [c, a]") {
@@ -151,7 +153,7 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(GraphOps.kCorePeel(edges, k = 6, iters = 3).count() == 0L)
   }
 
-  test("connectedComponentsStar: path graph, stars, and parity with min-propagation") {
+  test("connectedComponentsStar: path graph, stars, and parity with a union-find") {
     // a 12-node path: diameter 11, the case min-propagation pays 11
     // rounds for and star contraction collapses in O(log)
     val path = (0L until 11L).map(i => (i, i + 1)).toDF("src", "dst")
@@ -165,14 +167,13 @@ class GraphOpsSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(gotMessy == Map(3L -> 3L, 4L -> 3L, 5L -> 3L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 40L -> 40L, 41L -> 40L))
-    // parity with the min-propagation implementation on a mixed graph
-    val mixed = ((0L until 30L).map(i => (i, i + 1)) ++
-      Seq((50L, 60L), (60L, 70L), (80L, 81L))).toDF("src", "dst")
-    val star = GraphOps.connectedComponentsStar(mixed)
-      .as[(Long, Long)].collect().toMap
-    val prop = GraphOps.connectedComponents(mixed.toDF("a", "b"))
-      .as[(Long, Long)].collect().toMap
-    assert(star == prop, "star contraction must agree with min-propagation")
+    // parity with the plain-Scala union-find on a mixed graph
+    val mixed = (0L until 30L).map(i => (i, i + 1)) ++
+      Seq((50L, 60L), (60L, 70L), (80L, 81L))
+    val star = GraphOps.connectedComponentsStar(mixed.toDF("src", "dst"))
+      .collect().map(r => r.get(0) -> r.get(1)).toMap
+    assert(star == GraphReference.components(mixed, Ordering.Long.on[Any](_.asInstanceOf[Long])),
+      "star contraction must agree with a union-find")
   }
 
   test("connectedComponentsStar: a dedup-shaped graph stays within its Spark-job budget") {

@@ -5,8 +5,9 @@ import graft.graph.GraphOps
 
 /** Property-style tests (SURVEY §5.4) over seeded random graphs:
   * random DAGs produce a valid topological order; planting a back-edge
-  * makes the cycle detector fire. Deterministic seed — each case is a
-  * handful of Spark jobs, so the case count stays small. */
+  * makes the cycle detector fire; every answer equals its plain-Scala
+  * [[GraphReference]]. Deterministic seed — each case is a handful of
+  * Spark jobs, so the case count stays small. */
 class GraphPropertySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -21,13 +22,13 @@ class GraphPropertySpec extends AnyFunSuite {
     }.distinct
   }
 
-  /** The distributed reference for a rooted topoOrder: bfsClosure from
-    * `root` and the edges leaving that closure. */
-  private def closure(edges: org.apache.spark.sql.DataFrame,
-      root: org.apache.spark.sql.DataFrame) = {
-    val nodes = GraphOps.bfsClosure(edges, root)
-    (nodes, edges.join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi"))
-  }
+  /** `(node, value)` rows as a map. */
+  private def pairs(df: org.apache.spark.sql.DataFrame): Map[Any, Any] =
+    df.collect().map(r => r.get(0) -> r.get(1)).toMap
+
+  /** The first column's values as a set. */
+  private def firsts(df: org.apache.spark.sql.DataFrame): Set[Any] =
+    df.collect().map(_.get(0)).toSet
 
   test("random DAGs: topoDepth yields a valid topological order") {
     val rng = new scala.util.Random(7)
@@ -53,32 +54,32 @@ class GraphPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("driver-side topoOrder/detectCycles agree with the distributed topoDepth/findCycleNodes") {
+  test("driver-side topoOrder/detectCycles agree with plain-Scala depth and cycle references") {
     import org.apache.spark.sql.DataFrame
     import graft.graph.CycleException
     val rng = new scala.util.Random(29)
-    /** Driver verdict and depths vs the distributed fixpoints, over the
-      * node frame `nodes` (one column `key`). */
-    def check(edges: DataFrame, nodes: DataFrame, what: String): Unit = {
-      val distCyclic = GraphOps.findCycleNodes(edges).count() > 0
+    /** Driver verdict, cycle set and depths against [[GraphReference]],
+      * over the node frame `nodes` (one column `key`). */
+    def check(es: Seq[(Any, Any)], edges: DataFrame, nodes: DataFrame, what: String): Unit = {
+      val cyclic = GraphReference.cycleReaching(es)
+      assert(firsts(GraphOps.findCycleNodes(edges)) == cyclic, s"cycle set differs on $what")
       val driverCyclic =
         try { GraphOps.detectCycles(edges); false }
         catch { case _: CycleException => true }
-      assert(driverCyclic == distCyclic, s"cycle verdict differs on $what")
-      if (!distCyclic) {
-        val got = GraphOps.topoOrder(nodes, "key", edges)
-          .select("key", "__ord").collect().map(r => r.get(0) -> r.getInt(1)).toMap
-        val want = GraphOps.topoDepth(edges)
-          .collect().map(r => r.get(0) -> r.getInt(1)).toMap
-        assert(got == want, s"depths differ on $what")
+      assert(driverCyclic == cyclic.nonEmpty, s"cycle verdict differs on $what")
+      if (cyclic.isEmpty) {
+        val want = GraphReference.depths(es)
+        assert(pairs(GraphOps.topoOrder(nodes, "key", edges).select("key", "__ord")) == want,
+          s"topoOrder depths differ on $what")
+        assert(pairs(GraphOps.topoDepth(edges)) == want, s"topoDepth differs on $what")
       }
     }
     def strings(es: Seq[(String, String)], what: String): Unit =
-      check(es.toDF("src", "dst"),
+      check(es, es.toDF("src", "dst"),
         es.flatMap(e => Seq(e._1, e._2)).distinct.toDF("key"), what)
     def longs(es: Seq[(String, String)], what: String): Unit = {
       val ls = es.map { case (a, b) => (a.tail.toLong, b.tail.toLong) }
-      check(ls.toDF("src", "dst"),
+      check(ls, ls.toDF("src", "dst"),
         ls.flatMap(e => Seq(e._1, e._2)).distinct.toDF("key"), s"$what (Long ids)")
     }
     (1 to 3).foreach { i =>
@@ -98,20 +99,21 @@ class GraphPropertySpec extends AnyFunSuite {
   test("rooted topoOrder agrees with bfsClosure and topoDepth over the closure's edges") {
     import org.apache.spark.sql.{DataFrame, Row}
     val rng = new scala.util.Random(31)
-    /** Rooted driver pass vs the distributed references: the row set is
-      * bfsClosure's, the depths are topoDepth's over the edges leaving
-      * the closure (0 for a root without edges). `nodes` holds every
-      * edge endpoint; the root is added to it. */
-    def check(edges: DataFrame, nodes: DataFrame, root: Any, what: String): Unit = {
+    /** Rooted driver pass vs [[GraphReference]]: the row set is the
+      * root's BFS closure, the depths are the longest paths over the
+      * edges leaving the closure (0 for a root without edges). `nodes`
+      * holds every edge endpoint; the root is added to it. */
+    def check(es: Seq[(Any, Any)], edges: DataFrame, nodes: DataFrame, root: Any,
+        what: String): Unit = {
       val rootDf = spark.createDataFrame(
         java.util.Collections.singletonList(Row(root)), nodes.schema)
-      val (tree, treeEdges) = closure(edges, rootDf)
-      val depth = GraphOps.topoDepth(treeEdges)
-        .collect().map(r => r.get(0) -> r.getInt(1)).toMap
-      val want = tree.collect().map(r => r.get(0) -> depth.getOrElse(r.get(0), 0)).toMap
+      val tree = GraphReference.closure(es, Seq(root))
+      assert(firsts(GraphOps.bfsClosure(edges, rootDf)) == tree, s"closure of $root on $what")
+      val depth = GraphReference.depths(es.filter(e => tree(e._1)))
+      val want = tree.map(n => n -> depth.getOrElse(n, 0)).toMap
       val got = GraphOps.topoOrder(nodes.union(rootDf).distinct(), "key", edges, Some(root))
-        .select("key", "__ord").collect().map(r => r.get(0) -> r.getInt(1)).toMap
-      assert(got == want, s"rooted at $root on $what")
+        .select("key", "__ord")
+      assert(pairs(got) == want, s"rooted at $root on $what")
     }
     (1 to 2).foreach { i =>
       val dag = randomDag(rng)
@@ -125,11 +127,11 @@ class GraphPropertySpec extends AnyFunSuite {
       roots.foreach { case (kind, r) =>
         val what = s"DAG $i, $kind root: $dag"
         if (i % 2 == 1)
-          check(dag.toDF("src", "dst"),
+          check(dag, dag.toDF("src", "dst"),
             dag.flatMap(e => Seq(e._1, e._2)).distinct.toDF("key"), r, what)
         else {
           val ls = dag.map { case (a, b) => (a.tail.toLong, b.tail.toLong) }
-          check(ls.toDF("src", "dst"),
+          check(ls, ls.toDF("src", "dst"),
             ls.flatMap(e => Seq(e._1, e._2)).distinct.toDF("key"), r.tail.toLong,
             s"$what (Long ids)")
         }
@@ -145,15 +147,20 @@ class GraphPropertySpec extends AnyFunSuite {
       val (a, b) = dag.head
       val nodes = (dag.flatMap(e => Seq(e._1, e._2)) ++ Seq("x", "y")).distinct.toDF("key")
       // x <-> y reaches into a's tree, but nothing in the tree reaches x
-      val outside = (("x", "y") :: ("y", "x") :: ("x", a) :: dag).toDF("src", "dst")
+      val outsideEs = ("x", "y") :: ("y", "x") :: ("x", a) :: dag
+      val outside = outsideEs.toDF("src", "dst")
       intercept[CycleException] { GraphOps.detectCycles(outside) }
-      val tree = GraphOps.bfsClosure(outside, Seq(a).toDF("node")).as[String].collect().toSet
+      val tree = GraphReference.closure(outsideEs, Seq(a))
       val got = GraphOps.topoOrder(nodes, "key", outside, Some(a))
         .select("key").as[String].collect().toSet
       assert(got == tree, s"cycle outside $a's tree in $dag")
       // b --> a closes a cycle inside a's tree
-      val inside = ((b, a) :: dag).toDF("src", "dst")
-      val treeEdges = closure(inside, Seq(a).toDF("node"))._2
+      val insideEs = (b, a) :: dag
+      val inside = insideEs.toDF("src", "dst")
+      val insideTree = GraphReference.closure(insideEs, Seq(a))
+      // the closure itself does not raise on the cycle
+      assert(firsts(GraphOps.bfsClosure(inside, Seq(a).toDF("node"))) == insideTree)
+      val treeEdges = insideEs.filter(e => insideTree(e._1)).toDF("src", "dst")
       val want = intercept[CycleException] { GraphOps.detectCycles(treeEdges) }
       val e = intercept[CycleException] {
         GraphOps.topoOrder(nodes, "key", inside, Some(a))
@@ -166,27 +173,13 @@ class GraphPropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     // components: {1,2,3,9} (chain), {5,6}
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 9L), (5L, 6L)).toDF("a", "b")
-    val comps = GraphOps.connectedComponents(edges)
+    val comps = GraphOps.connectedComponentsStar(edges)
       .as[(Long, Long)].collect().toMap
     assert(Seq(1L, 2L, 3L, 9L).forall(comps(_) == 1L))
     assert(comps(5L) == 5L && comps(6L) == 5L)
   }
 
   test("connectedComponentsStar equals a driver union-find over seeded random graphs") {
-    /** Component minimum per node over the edges without a null
-      * endpoint or a self-loop — the nodes connectedComponentsStar keeps. */
-    def reference(es: Seq[(Any, Any)], ord: Ordering[Any]): Map[Any, Any] = {
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x: Any): Any = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      es.filter { case (a, b) => a != null && b != null && a != b }.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-      }
-      parent.keys.map(x => x -> find(x)).toMap
-    }
     /** Random edges over `n` nodes, a shuffled path of 120 nodes above
       * them (diameter 119), duplicated and reversed copies of some
       * edges, self-loops, and edges with a null endpoint. */
@@ -217,7 +210,7 @@ class GraphPropertySpec extends AnyFunSuite {
               Ordering.Long.on[Any](_.asInstanceOf[Long]), es.toDF("src", "dst"))
         val got = GraphOps.connectedComponentsStar(df.repartition(parts))
           .collect().map(r => r.get(0) -> r.get(1)).toMap
-        assert(got == reference(rows, ord),
+        assert(got == GraphReference.components(rows, ord),
           s"coalescing $coalesce, $parts partitions, ${if (strings) "String" else "Long"} ids: $es")
       }
       assert(GraphOps.connectedComponentsStar(Seq.empty[(Long, Long)].toDF("src", "dst"))

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 /** Dumps the q223 candidate-pair stage's plan (the stage the r16
   * blocking change rewrote) — it executes inside the
-  * connectedComponents fixpoint behind a checkpoint boundary, so the
+  * connectedComponentsStar fixpoint behind a checkpoint boundary, so the
   * final query's explain cannot show it. Usage:
   *
   *   Test/runMain graft.tools.GoldenPairsPlanDump <outFile>
