@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a SparkSession builder pre-configured the way
-  * the engine expects — GraftExtensions registered (native `graft_dot`
-  * and `graft_lsh_buckets`; every operator falls back to bit-identical
-  * built-in compositions without them, just slower), UTC session time
+  * the engine expects — GraftExtensions registered (native `graft_dot`,
+  * `graft_lsh_buckets`, `graft_word_shingles`, `graft_minhash`, …;
+  * `Dedup`'s shingling and MinHash require them, the other operators
+  * fall back to slower bit-identical built-in compositions), UTC session time
   * (the oracle/export contract), and shuffle parallelism sized to the
   * worker count instead of Spark's default 200 (right for local and
   * small-cluster runs; raise it with the cluster), and a generated-code

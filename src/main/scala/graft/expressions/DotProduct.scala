@@ -71,13 +71,16 @@ case class DotProduct(left: Expression, right: Expression)
 
 /** `SparkSessionExtensions` installer: activate with
   * `.config("spark.sql.extensions", "graft.expressions.GraftExtensions")`
-  * (or pass to `withExtensions`). Registers `graft_dot` and
-  * `graft_lsh_buckets`. */
+  * (or pass to `withExtensions`). Registers the native functions
+  * (`graft_dot`, `graft_lsh_buckets`, `graft_word_shingles`,
+  * `graft_minhash`, …) and the native join strategies. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.dotProductDescriptor)
     ext.injectFunction(GraftExtensions.lshBucketsDescriptor)
     ext.injectFunction(GraftExtensions.md5PrefixLongDescriptor)
+    ext.injectFunction(GraftExtensions.wordShinglesDescriptor)
+    ext.injectFunction(GraftExtensions.minHashDescriptor)
     ext.injectFunction(GraftExtensions.bloomContainsDescriptor)
     ext.injectFunction(GraftExtensions.winnowSelectDescriptor)
     ext.injectFunction(GraftExtensions.pngBytesDescriptor)
@@ -251,6 +254,37 @@ object GraftExtensions {
         require(children(1).eval().isInstanceOf[Number],
           "graft_md5_long hexDigits must be a numeric literal")
         Md5PrefixLong(children.head,
+          children(1).eval().asInstanceOf[Number].intValue)
+      })
+
+  /** `graft_word_shingles(text, n)` — the distinct word n-grams of a
+    * document (see [[WordShingles]]); `n` must be a foldable literal. */
+  val wordShinglesDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier("graft_word_shingles"),
+      new ExpressionInfo(classOf[WordShingles].getName, "graft_word_shingles"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          s"graft_word_shingles takes exactly 2 arguments, got ${children.length}")
+        require(children(1).foldable &&
+            children(1).eval().isInstanceOf[Number],
+          "graft_word_shingles n must be a numeric literal")
+        WordShingles(children.head,
+          children(1).eval().asInstanceOf[Number].intValue)
+      })
+
+  /** `graft_minhash(shingles, numHashes)` — the MinHash signature of a
+    * shingle set (see [[MinHashSignature]]); `numHashes` must be a
+    * foldable literal. */
+  val minHashDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier("graft_minhash"),
+      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2,
+          s"graft_minhash takes exactly 2 arguments, got ${children.length}")
+        require(children(1).foldable &&
+            children(1).eval().isInstanceOf[Number],
+          "graft_minhash numHashes must be a numeric literal")
+        MinHashSignature(children.head,
           children(1).eval().asInstanceOf[Number].intValue)
       })
 

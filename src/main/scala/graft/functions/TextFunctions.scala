@@ -11,7 +11,12 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace tokenization; empty/blank text → empty array. */
+  /** Whitespace tokenization, with Spark's `trim` and `split` quirks:
+    * `trim` removes U+0020 only (not tabs or newlines), and `split` on
+    * Java `\s+` (`[ \t\n\x0B\f\r]`; NBSP and other Unicode spaces are
+    * not separators) keeps empty edge tokens, so `"\tab"` gives
+    * `["", "ab"]` and `"ab\n"` gives `["ab", ""]`. Text that is empty
+    * after trimming gives an empty array, null text null. */
   def tokens(text: Column): Column =
     when(length(trim(text)) === 0, array().cast("array<string>"))
       .otherwise(split(trim(text), "\\s+"))

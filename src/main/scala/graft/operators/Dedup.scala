@@ -6,11 +6,15 @@ import graft.functions.{MysqlFunctions, TextFunctions}
 
 /** Deduplication operators for large-scale text corpora: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard. All are pure DataFrame
-  * pipelines — no driver materialization, no UDFs (everything stays in
-  * whole-stage codegen), shuffles only on group/join keys — so they
-  * scale horizontally: the only skew hazard is hot LSH buckets /
-  * high-document-frequency shingles, which `maxBucket`/`maxDf` caps
-  * bound explicitly.
+  * pipelines — no driver materialization, no UDFs, shuffles only on
+  * group/join keys — so they scale horizontally: the only skew hazard
+  * is hot LSH buckets / high-document-frequency shingles, which
+  * `maxBucket`/`maxDf` caps bound explicitly. Shingling and MinHash
+  * signing run as native codegen'd expressions
+  * ([[graft.expressions.WordShingles]],
+  * [[graft.expressions.MinHashSignature]]); several other stages
+  * (band hashes, the collision audit, prefix filtering) still use
+  * higher-order functions, which run outside whole-stage codegen.
   */
 object Dedup {
 
@@ -29,17 +33,18 @@ object Dedup {
     df.groupBy(TextFunctions.fingerprint(col(textCol)).as("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Word n-gram shingles of `text` (n consecutive whitespace tokens,
-    * space-joined); documents shorter than n tokens yield one shingle =
-    * the whole token sequence. Distinct per document. */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = TextFunctions.tokens(text)
-    array_distinct(
-      when(size(toks) >= n,
-        transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array(concat_ws(" ", toks))))
-  }
+  /** Word n-gram shingles of `text`: every run of `n` consecutive
+    * tokens, joined by one space, distinct per document in
+    * first-occurrence order. Tokens are [[TextFunctions.tokens]]:
+    * `text` trimmed of U+0020 only, then split on runs of Java `\s`
+    * (`[ \t\n\x0B\f\r]`) keeping empty edge tokens, so a leading tab
+    * gives an empty first token; NBSP and other Unicode spaces are not
+    * separators. A document with fewer than `n` tokens yields one
+    * shingle, the whole token sequence; empty-after-trim and null text
+    * yield `[""]`. One linear pass per document in the native
+    * [[graft.expressions.WordShingles]]; never null. */
+  def shingles(text: Column, n: Int): Column =
+    call_function("graft_word_shingles", text, lit(n))
 
   /** Shingle the corpus ONCE, materialized: (idCol, __sh array<string>).
     * The shared first stage of the whole n-gram family — signatures,
@@ -57,15 +62,19 @@ object Dedup {
 
   /** MinHash signatures from pre-shingled sets, materialized —
     * signatures feed the hot-bucket count and both LSH self-join sides,
-    * so consumers read one checkpoint rather than re-aggregating.
+    * so consumers read one checkpoint. A map-only select of
+    * [[minHashSigRow]] over the rows whose set is non-empty (an empty
+    * or null set has no signature); one row per input row, so `sets`
+    * holds one set per id, as [[shingleSets]] gives.
     * Returns (idCol, sig array<long>). */
   def minHashSigsFromSets(sets: DataFrame, idCol: String,
       numHashes: Int): DataFrame =
-    materialized(minHashFromShingleRows(
-      sets.select(col(idCol), explode(col("__sh")).as("sh")),
-      idCol, numHashes))
+    materialized(sets.filter(size(col("__sh")) > 0)
+      .select(col(idCol), minHashSigRow(col("__sh"), numHashes).as("sig")))
 
-  /** MinHash signatures: `numHashes` independent min-hashes per doc.
+  /** MinHash signatures: `numHashes` independent min-hashes per doc,
+    * over the [[shingles]] of `textCol` (same token rule); documents
+    * whose shingle set is empty get no row.
     *
     * Hash family: ONE md5-prefix base hash per shingle, expanded to
     * numHashes values through the affine universal family
@@ -75,9 +84,7 @@ object Dedup {
     * deterministic, free of stored random state, and reproducible in
     * ANSI SQL so the whole LSH pipeline is oracle-verifiable. All
     * intermediates fit a Long under ANSI: base < 2^32, 2i+1 < 2^8 ⇒
-    * product < 2^40. Computed as numHashes parallel `min` aggregates
-    * over the exploded shingle set (map-side partial agg ⇒ the shuffle
-    * carries one row per doc, not per shingle).
+    * product < 2^40.
     * Returns (idCol, sig array<long>).
     */
   def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
@@ -85,20 +92,17 @@ object Dedup {
     minHashSigsFromSets(shingleSets(df, idCol, textCol, shingleSize),
       idCol, numHashes)
 
-  /** ROW-WISE MinHash signature: the same affine family as
-    * [[minHashSigsFromSets]] computed as `numHashes` `array_min`s over
-    * the row's shingle array — a pure map-only expression, no explode,
-    * no aggregation, value-identical to the exploded-agg form
-    * (property-tested). The streaming near-dup path needs this shape
-    * (a stateful streaming aggregation would otherwise hold per-doc
-    * state to the watermark); batch callers prefer
-    * [[minHashSigsFromSets]], whose exploded aggregate shares the
-    * shingle rows with the df/hot-set stages. */
+  /** ROW-WISE MinHash signature of a shingle array (element i = min
+    * over the non-null shingles of the affine family of
+    * [[minHashSignatures]]): a map-only expression, the native
+    * [[graft.expressions.MinHashSignature]], which hashes each shingle
+    * once. An empty, all-null or null array gives `numHashes` nulls.
+    * The shingles are usually [[shingles]] of a text (same token rule).
+    * Both the batch [[minHashSigsFromSets]] and the streaming near-dup
+    * path use it; the stream needs the map-only shape, since a stateful
+    * streaming aggregation would hold per-doc state to the watermark. */
   def minHashSigRow(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i =>
-      array_min(transform(shingles, sh =>
-        pmod(TextFunctions.md5Int(sh, 8) * lit(2L * i + 1) + lit(i * 40503L),
-          lit(2147483647L))))): _*)
+    call_function("graft_minhash", shingles, lit(numHashes))
 
   /** Band → bucket hashes of a signature array (the [[lshBuckets]]
     * banding as a Column): element b = xxhash64(slice b, seed b). */
@@ -106,19 +110,6 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(slice(sig, b * (size(sig) / bands) + 1,
         size(sig) / bands), b))
-
-  /** Signature aggregation over pre-exploded (idCol, sh) rows. */
-  private def minHashFromShingleRows(sh: DataFrame, idCol: String,
-      numHashes: Int): DataFrame = {
-    val based = sh.withColumn("__base", TextFunctions.md5Int(col("sh"), 8))
-    val minCols = (0 until numHashes).map(i =>
-      min(pmod(col("__base") * lit(2L * i + 1) + lit(i * 40503L),
-        lit(2147483647L))).as(s"h$i"))
-    based.groupBy(col(idCol))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col(idCol),
-        array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-  }
 
   /** LSH banding: split the signature into `bands` bands of
     * numHashes/bands rows each; band hash = xxhash64 of the slice.

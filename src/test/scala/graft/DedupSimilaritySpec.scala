@@ -103,7 +103,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       Seq.fill(1 + rng.nextInt(25))("t" + rng.nextInt(40)).mkString(" ")))
       .toDF("doc_id", "text")
     val sets = Dedup.shingleSets(docs, "doc_id", "text", 3)
-    val agg = Dedup.minHashSigsFromSets(sets, "doc_id", 64)
+    val agg = DedupReference.minHashSigsFromSets(sets, "doc_id", 64)
       .as[(Long, Seq[Long])].collect().toMap
     val row = sets.select(col("doc_id"),
         Dedup.minHashSigRow(col("__sh"), 64).as("sig"))
