@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Library entry point: a SparkSession builder pre-configured the way
   * the engine expects — GraftExtensions registered (native `graft_dot`,
   * `graft_lsh_buckets`, `graft_word_shingles`, `graft_minhash`, …;
-  * `Dedup`'s shingling and MinHash require them, the other operators
-  * fall back to slower bit-identical built-in compositions), UTC session time
+  * required: every operator calls its native functions unconditionally,
+  * with no built-in fallback, and a session without the extension fails
+  * analysis with `UNRESOLVED_ROUTINE` naming the function), UTC session time
   * (the oracle/export contract), and shuffle parallelism sized to the
   * worker count instead of Spark's default 200 (right for local and
   * small-cluster runs; raise it with the cluster), and a generated-code

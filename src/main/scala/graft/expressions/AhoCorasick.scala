@@ -13,9 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the driver, shipped as a codegen reference object — the per-row
   * cost is O(chars + matches) REGARDLESS of pattern count, which is
   * the whole point: a 10k-term blocklist scan at 100 TB is one corpus
-  * pass, not 10k regexp passes (the composition fallback in
-  * `TextFunctions.multiMatchCounts` is exactly that per-pattern
-  * position scan, bit-identical but O(chars · patterns)). */
+  * pass, not 10k regexp passes. */
 final class AcAutomaton(val patterns: Array[String]) extends Serializable {
   require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
     "patterns must be non-empty strings")

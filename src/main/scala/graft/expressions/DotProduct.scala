@@ -21,10 +21,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * order: compose built-ins first, custom Expression second).
   *
   * Semantics: left-to-right summation over the common prefix of the two
-  * arrays — bit-identical to the `dotUnrolled` built-in composition and
-  * to the sequential SQL-oracle formulations. Array ELEMENTS must be
-  * non-null (embedding vectors; undefined otherwise), null INPUTS yield
-  * null via the standard null-intolerant contract.
+  * arrays — bit-identical to the unrolled built-in composition kept as
+  * the test reference and to the sequential SQL-oracle formulations.
+  * Array ELEMENTS must be non-null (embedding vectors; undefined
+  * otherwise), null INPUTS yield null via the standard null-intolerant
+  * contract.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -73,7 +74,10 @@ case class DotProduct(left: Expression, right: Expression)
   * `.config("spark.sql.extensions", "graft.expressions.GraftExtensions")`
   * (or pass to `withExtensions`). Registers the native functions
   * (`graft_dot`, `graft_lsh_buckets`, `graft_word_shingles`,
-  * `graft_minhash`, …) and the native join strategies. */
+  * `graft_minhash`, …) and the native join strategies. Required: the
+  * operators call these functions unconditionally, with no built-in
+  * fallback, so a session without the extension fails analysis with
+  * `UNRESOLVED_ROUTINE` naming the `graft_…` function. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.dotProductDescriptor)
@@ -131,23 +135,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-
-  /** Is native function `name` registered in the ACTIVE session? The
-    * one shared probe for every native-vs-fallback split (md5Int,
-    * winnow, bloom). CAVEAT (applies to every caller): this resolves
-    * at Column-CONSTRUCTION time against the thread's active session,
-    * not at analysis time — a Column built while an extension session
-    * is active but analyzed against a session without the extension
-    * fails analysis with "undefined function"; the reverse silently
-    * takes the slower bit-identical fallback. Single-session processes
-    * (every driver-contract main) never hit either case; multi-session
-    * callers should construct columns on the thread whose active
-    * session will analyze them. */
-  def hasFunction(name: String): Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(s =>
-        try s.catalog.functionExists(name)
-        catch { case _: Throwable => false })
 
   /** `graft_vec_sum(arr)` — native elementwise array-sum aggregate. */
   val vecSumDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =

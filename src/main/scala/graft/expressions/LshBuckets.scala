@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Deterministic md5-derived random hyperplanes shared by the native
-  * expression and the built-in fallback composition:
+  * expression and its built-in test reference composition:
   * weight(seed, plane p, dim d) = md5("seed:p:d") first-8-hex / 2^32 −
   * 0.5 — a symmetric uniform (any symmetric distribution gives valid
   * sign-projection LSH) that, unlike a seeded Gaussian RNG, is
@@ -39,7 +39,7 @@ object LshPlanes {
   * Weights derive deterministically from (bands, planesPerBand, dim,
   * seed) — the case-class fields are scalars, so plan canonicalization
   * and exchange reuse work structurally. Summation is left-to-right
-  * from 0.0, bit-identical to the fallback composition (and the SQL
+  * from 0.0, bit-identical to the built-in composition (and the SQL
   * oracles' sequential form). Vector elements must be non-null.
   */
 case class LshBuckets(child: Expression, bands: Int, planesPerBand: Int,

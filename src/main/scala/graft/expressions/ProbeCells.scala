@@ -20,11 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * nlist (the linear-slope contract of `Similarity.ivfSelfTopK`:
   * nlist ∝ N keeps candidates-per-query constant), the probe pass is
   * N×nlist×dim flops — at 20k vectors × 160 cells × 64 dims that is
-  * 200M lambda evaluations for the fallback vs one tight generated
+  * 200M lambda evaluations for the composition vs one tight generated
   * loop here. This is the same pathology (and the same fix) as
   * [[LshBuckets]].
   *
-  * Semantics match the fallback bit-for-bit: distance is the
+  * Semantics match that composition bit-for-bit: distance is the
   * left-to-right fold Σ(x−c)² over the common prefix of vector and
   * centroid (vectors are dim-length by construction; shorter inputs are
   * undefined), selection is strictly-less on distance with ties kept by
@@ -90,7 +90,7 @@ object ProbeCells {
     * vector normalized to NaN) can leave trailing slots at the
     * Int.MaxValue sentinel. A COLD epilogue then fills those slots
     * with the lowest-indexed cells not already selected — exactly the
-    * fallback's `array_sort` order (NaN sorts last, ties by cell asc).
+    * composition's `array_sort` order (NaN sorts last, ties by cell asc).
     * The hot path is byte-identical to the r15 loop: an earlier fix
     * that threaded NaN ordering through the insertion comparisons
     * (`java.lang.Double.compare` + a fill counter) measured 1.3–3.7×

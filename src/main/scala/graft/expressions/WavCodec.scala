@@ -5,13 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpressi
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
 
-/** Native WAV twins of the composed-Column forms in
-  * [[graft.operators.Multimodal]]:
+/** Native WAV kernels behind [[graft.operators.Multimodal]]:
   *
   * [[WavPcmBytes]] builds the canonical RIFF/fmt/data container with
   * the md5-derived non-silent 16-bit PCM payload — BYTE-identical to
-  * `Multimodal.wavBytesPcm` (asserted in MultimodalSpec), whose
-  * hex-assembly Column form evaluates one interpreted md5+concat
+  * the hex-assembly Column form kept as a test reference (asserted in
+  * AudioEmbedSpec), which evaluates one interpreted md5+concat
   * lambda per sample (~2 s of q262's wall at sf0.1 for 3M samples);
   * here the samples are a tight MessageDigest loop into a ByteBuffer.
   *

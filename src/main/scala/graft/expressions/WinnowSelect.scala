@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native winnowing selection over one text chunk: the distinct
   * rolling-window minima of the per-position `md5Int(substr(t, i,
   * gram), 10) * 2^23 + i` encodings — exactly the builtin composition
-  * in `Dedup.winnowedDupPairs` (explode positions → hash → window min
-  * → distinct), folded into ONE pass per row.
+  * kept as the test reference (explode positions → hash → window min →
+  * distinct), folded into ONE pass per row.
   *
   * Why it exists: the builtin form explodes O(total-chars) rows, pays
   * a full 32-hex-char md5 pipeline per position, and shuffles the

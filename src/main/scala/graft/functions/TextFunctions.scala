@@ -125,66 +125,31 @@ object TextFunctions {
     * sketch built on it verifiable against a SQL oracle — the reason
     * the MinHash/SimHash/rolling-hash family uses it.
     *
-    * Uses the native [[graft.expressions.Md5PrefixLong]] when the
-    * active session has GraftExtensions (digest → shift, no hex-string
-    * materialization or base re-parse on the hottest per-row path);
-    * bit-identical built-in fallback otherwise (property-tested).
-    *
-    * ACTIVE-SESSION DEPENDENCY: native-vs-fallback resolves at
-    * Column-CONSTRUCTION time via `GraftExtensions.hasFunction` — see
-    * its caveat for the multi-session hazard (single-session processes,
-    * i.e. every driver-contract main, never hit it). */
+    * Native [[graft.expressions.Md5PrefixLong]] (`graft_md5_long`,
+    * registered by `GraftExtensions`): digest → shift, no hex-string
+    * materialization or base re-parse on the hottest per-row path. */
   def md5Int(c: Column, hexDigits: Int): Column = {
     require(hexDigits <= 15, "more than 15 hex digits overflows a signed Long")
-    if (graft.expressions.GraftExtensions.hasFunction("graft_md5_long"))
-      call_function("graft_md5_long", c, lit(hexDigits))
-    else conv(substring(md5(c), 1, hexDigits), 16, 10).cast("long")
+    call_function("graft_md5_long", c, lit(hexDigits))
   }
 
   // ---- Unicode normalization ----
 
   /** NFC canonical composition via the native
-    * [[graft.expressions.NfcNormalize]]; UDF fallback (same JDK
-    * Normalizer, non-codegen) when the session lacks GraftExtensions —
-    * the same documented fallback pattern as the Bloom probe. Shares
-    * md5Int's active-session caveat. */
-  def nfc(c: Column): Column =
-    if (graft.expressions.GraftExtensions.hasFunction("graft_nfc"))
-      call_function("graft_nfc", c)
-    else udf((s: String) =>
-      if (s == null) null
-      else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
-      .apply(c)
+    * [[graft.expressions.NfcNormalize]] (`graft_nfc`). */
+  def nfc(c: Column): Column = call_function("graft_nfc", c)
 
-  /** True iff already NFC (native quick-check; UDF fallback). */
-  def isNfc(c: Column): Column =
-    if (graft.expressions.GraftExtensions.hasFunction("graft_is_nfc"))
-      call_function("graft_is_nfc", c)
-    else udf((s: String) =>
-      if (s == null) null.asInstanceOf[java.lang.Boolean]
-      else java.lang.Boolean.valueOf(java.text.Normalizer
-        .isNormalized(s, java.text.Normalizer.Form.NFC)))
-      .apply(c)
+  /** True iff already NFC (native quick-check `graft_is_nfc`). */
+  def isNfc(c: Column): Column = call_function("graft_is_nfc", c)
 
   // ---- Multi-pattern (blocklist) scanning ----
 
   /** All-occurrence match counts (overlaps included) for a FIXED
-    * pattern list, index-aligned array<long>. Native Aho-Corasick
-    * ([[graft.expressions.MultiPatternCounts]], one pass over the text
-    * regardless of pattern count) when the session has GraftExtensions;
-    * bit-identical per-pattern position-scan composition otherwise
-    * (O(chars·patterns) — the gap IS the operator's reason to exist).
-    * Shares md5Int's active-session caveat. */
+    * pattern list, index-aligned array<long>: native Aho-Corasick
+    * ([[graft.expressions.MultiPatternCounts]], `graft_ac_counts`), one
+    * pass over the text regardless of pattern count. */
   def multiMatchCounts(c: Column, patterns: Seq[String]): Column =
-    if (graft.expressions.GraftExtensions.hasFunction("graft_ac_counts"))
-      call_function("graft_ac_counts", c,
-        array(patterns.map(lit): _*))
-    else array(patterns.map { p =>
-      val plen = p.length
-      when(length(c) < plen, lit(0L))
-        .otherwise(size(filter(sequence(lit(1), length(c) - plen + 1),
-          j => c.substr(j, lit(plen)) === lit(p))).cast("long"))
-    }: _*)
+    call_function("graft_ac_counts", c, array(patterns.map(lit): _*))
 
   // ---- PII scrubbing (emails / phone numbers) ----
   // Patterns are lookaround-free (RE2-compatible) so the SQL oracle's

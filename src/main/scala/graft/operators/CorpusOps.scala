@@ -15,28 +15,16 @@ import graft.functions.{MysqlFunctions, TextFunctions}
   */
 object CorpusOps {
 
-  /** Ships Bloom-filter BYTES to executors and deserializes once per
-    * JVM (`@transient lazy`) — the no-extensions fallback probe for
-    * [[bloomDecontaminateFromSets]]. */
-  private class BloomProbe(bytes: Array[Byte])
-      extends (Long => Boolean) with Serializable {
-    @transient private lazy val bf = org.apache.spark.util.sketch
-      .BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-    def apply(h: Long): Boolean = bf.mightContainLong(h)
-  }
-
   /** Fold a distinct-shingle frame (`__sh` string column) into a Bloom
     * filter NOW (a distributed aggregate collected to its ~1.2 B/item
     * serialized form) and return the probe: shingle Column → boolean
-    * Column. Native codegen'd `graft_bloom_contains` when the active
-    * session has GraftExtensions, the [[BloomProbe]] UDF closure
-    * otherwise — same bytes, same bits. Shared by the batch
+    * Column, the native codegen'd `graft_bloom_contains` over the
+    * filter bytes. Shared by the batch
     * [[bloomDecontaminateFromSets]] and the streaming
     * `EventStreams.deconStream` (where the filter is built once at
     * plan-build against the static bench side). */
   private[graft] def shingleBloomProbe(benchSh: DataFrame,
-      expectedItems: Long, fpp: Double,
-      forceFallbackProbe: Boolean = false): Column => Column = {
+      expectedItems: Long, fpp: Double): Column => Column = {
     val bf = benchSh.select(xxhash64(col("__sh")).as("__h"))
       .stat.bloomFilter("__h", expectedItems, fpp)
     val bytes = {
@@ -44,14 +32,7 @@ object CorpusOps {
       bf.writeTo(os)
       os.toByteArray
     }
-    val native = !forceFallbackProbe &&
-      graft.expressions.GraftExtensions.hasFunction("graft_bloom_contains")
-    if (native)
-      sh => call_function("graft_bloom_contains", lit(bytes), xxhash64(sh))
-    else {
-      val f = udf(new BloomProbe(bytes): Long => Boolean)
-      sh => f(xxhash64(sh))
-    }
+    sh => call_function("graft_bloom_contains", lit(bytes), xxhash64(sh))
   }
 
   /** Deterministic hash bucket in [0, buckets): md5 prefix of
@@ -371,14 +352,10 @@ object CorpusOps {
     * `expectedItems` sizes the filter (a capacity ESTIMATE, ≥ the
     * bench's distinct-shingle count for `fpp` to hold; overshooting
     * costs filter bytes, undershooting degrades fpp — never
-    * correctness). Probe path: native `graft_bloom_contains` when the
-    * active session has GraftExtensions; a deserialized-once UDF
-    * closure otherwise (same filter bytes, same bits).
-    * `forceFallbackProbe` pins the UDF path (test hook — the paths are
-    * asserted row-identical in CorpusOpsSpec). */
+    * correctness). The probe is the native `graft_bloom_contains`. */
   def bloomDecontaminateFromSets(corpusSets: DataFrame,
       benchSets: DataFrame, idCol: String, expectedItems: Long,
-      fpp: Double = 0.01, forceFallbackProbe: Boolean = false): DataFrame = {
+      fpp: Double = 0.01): DataFrame = {
     // materialized once: the Bloom build (an action at operator
     // construction) and the verify join otherwise each pay the bench
     // explode+distinct shuffle
@@ -386,8 +363,7 @@ object CorpusOps {
       .select(explode(col("__sh")).as("__sh"))
       .distinct()
       .localCheckpoint()
-    val probe = shingleBloomProbe(benchSh, expectedItems, fpp,
-      forceFallbackProbe)
+    val probe = shingleBloomProbe(benchSh, expectedItems, fpp)
     val candidates = corpusSets
       .filter(exists(col("__sh"), probe))
     candidates

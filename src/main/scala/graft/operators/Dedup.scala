@@ -372,16 +372,12 @@ object Dedup {
     * within budget stay exactly one chunk (k = 0, substr = identity),
     * so the common path is byte-identical to the unchunked plan.
     *
-    * When the active session has GraftExtensions, the hash + rolling
-    * min + distinct run as ONE native pass per chunk
-    * ([[graft.expressions.WinnowSelect]]) — no position explode, no
-    * window exchange; the builtin composition remains as the
-    * extension-less fallback and the two are property-tested
-    * identical. `forceBuiltinWinnow` pins the fallback (test hook). */
+    * The hash + rolling min + distinct run as ONE native pass per
+    * chunk ([[graft.expressions.WinnowSelect]], `graft_winnow`) — no
+    * position explode, no window exchange. */
   def winnowedDupPairs(df: DataFrame, idCol: String, textCol: String,
       gram: Int = 50, window: Int = 10, maxDf: Int = 1000,
-      maxChunkChars: Int = 8388608,
-      forceBuiltinWinnow: Boolean = false): DataFrame = {
+      maxChunkChars: Int = 8388608): DataFrame = {
     require(gram > 0 && window > 0)
     require(maxChunkChars <= 8388608 && maxChunkChars >= gram + window,
       "chunk must fit the 23-bit position field and hold a full window")
@@ -400,62 +396,21 @@ object Dedup {
     val docs = docs0
       .select(col("__id"), explode(sequence(lit(0L), kmax)).as("__c"),
         col("__txt"))
-      .select(col("__id"), col("__c"),
+      .select(col("__id"),
         substr(col("__txt"), (col("__c") * step + 1L).cast("int"),
           lit(maxChunkChars)).as("__txt"))
       .filter(length(col("__txt")) >= gram)
-    val native = !forceBuiltinWinnow &&
-      graft.expressions.GraftExtensions.hasFunction("graft_winnow")
-    val fp = if (native) {
-      // One-pass native winnow ([[graft.expressions.WinnowSelect]]):
-      // the per-position hash, clipped rolling min and distinct all
-      // happen inside one expression per chunk — no O(total-chars)
-      // position explode, no Window.partitionBy exchange (previously
-      // the engine's largest shuffle). The selected encodings stream
-      // out of the scan and recover their text inline: generate →
-      // substr → drop __txt sits in one codegen span, so the chunk
-      // text never crosses an exchange. Bit-identical to the builtin
-      // branch below (property-tested in DedupSimilaritySpec).
-      docs
-        .select(col("__id"), col("__txt"),
-          explode(call_function("graft_winnow", col("__txt"),
-            lit(gram), lit(window))).as("__m"))
-        .select(col("__id"),
-          substr(col("__txt"), pmod(col("__m"), lit(8388608L)).cast("int"),
-            lit(gram)).as("win"))
-        .distinct()
-    } else {
-      // Builtin fallback. Window stage carries ONLY (id, chunk, i,
-      // enc) — the 50-char window string is folded straight into the
-      // hash and never materialized for the full explode (measured ~2×
-      // on the whole operator at sf0.1); the ~2/window-density
-      // SELECTED positions recover their text with one substr against
-      // the doc-count-sized documents side. NOT materialized: this
-      // O(total-chars) stage has exactly ONE consumer (the rolling-min
-      // window below), whose partitionBy shuffle already writes the
-      // stage once — a localCheckpoint here double-writes the suite's
-      // largest intermediate for nothing (measured: q85 14.0 s with
-      // it, see BENCH notes r6).
-      val wins = docs
-        .select(col("__id"), col("__c"),
-          explode(sequence(lit(1), length(col("__txt")) - (gram - 1))).as("i"),
-          col("__txt"))
-        .select(col("__id"), col("__c"), col("i"),
-          (TextFunctions.md5Int(substr(col("__txt"), col("i"), lit(gram)), 10)
-            * lit(8388608L) + col("i")).as("enc"))
-      val sel = wins
-        .withColumn("__m", min(col("enc")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("__id", "__c")
-            .orderBy("i").rowsBetween(0, window - 1)))
-        .select(col("__id").as("__sid"), col("__c").as("__sc"), col("__m"))
-        .distinct()
-      docs.join(sel,
-          col("__id") === col("__sid") && col("__c") === col("__sc"))
-        .select(col("__id"),
-          substr(col("__txt"), pmod(col("__m"), lit(8388608L)).cast("int"),
-            lit(gram)).as("win"))
-        .distinct()
-    }
+    // The selected encodings stream out of the scan and recover their
+    // text inline: generate → substr → drop __txt sits in one codegen
+    // span, so the chunk text never crosses an exchange.
+    val fp = docs
+      .select(col("__id"), col("__txt"),
+        explode(call_function("graft_winnow", col("__txt"),
+          lit(gram), lit(window))).as("__m"))
+      .select(col("__id"),
+        substr(col("__txt"), pmod(col("__m"), lit(8388608L)).cast("int"),
+          lit(gram)).as("win"))
+      .distinct()
     val hot = fp.groupBy("win").agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDf).select("win")
     val pruned = fp.join(broadcast(hot), Seq("win"), "left_anti")

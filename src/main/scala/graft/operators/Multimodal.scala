@@ -263,38 +263,12 @@ object Multimodal {
     * an md5-derived int16 (`md5('pcm:doc:j') % 65536 − 32768`, j = the
     * flat sample index), little-endian like the format demands — so
     * the audio CONTENT, not just the header, is oracle-checkable, the
-    * [[ppmBytes]] move applied to the audio modality. */
+    * [[ppmBytes]] move applied to the audio modality. Native
+    * `graft_wav_pcm_bytes`: a tight digest loop into a ByteBuffer. */
   def wavBytesPcm(sampleRate: Column, channels: Column,
       nSamples: Column, docId: Column): Column =
-    if (graft.expressions.GraftExtensions.hasFunction("graft_wav_pcm_bytes"))
-      call_function("graft_wav_pcm_bytes", sampleRate.cast("int"),
-        channels.cast("int"), nSamples.cast("int"), docId.cast("long"))
-    else wavBytesPcmComposed(sampleRate, channels, nSamples, docId)
-
-  /** The built-in-Column form of [[wavBytesPcm]] — byte-identical to
-    * the native `graft_wav_pcm_bytes` (asserted in MultimodalSpec),
-    * but pays one interpreted md5+hex lambda per sample; the native
-    * twin is a tight digest loop into a ByteBuffer. */
-  def wavBytesPcmComposed(sampleRate: Column, channels: Column,
-      nSamples: Column, docId: Column): Column = {
-    val bits = 16
-    val blockAlign = channels * lit(bits / 8)
-    val dataSize = (nSamples * blockAlign).cast("long")
-    val byteRate = (sampleRate * blockAlign).cast("long")
-    val nVals = (nSamples * channels).cast("int")
-    // sample as its UNSIGNED 16-bit pattern (two's complement) — what
-    // leHex needs; signedness is re-derived by the reader
-    val payloadHex = array_join(transform(sequence(lit(0), nVals - 1), j =>
-      leHex(pmod(TextFunctions.md5Int(concat(lit("pcm:"),
-        docId.cast("string"), lit(":"), j.cast("string")), 8),
-        lit(65536)), 2)), "")
-    unhex(concat(
-      lit("52494646"), leHex(dataSize + 36, 4), lit("57415645"),
-      lit("666D7420"), leHex(lit(16), 4), leHex(lit(1), 2),
-      leHex(channels, 2), leHex(sampleRate, 4), leHex(byteRate, 4),
-      leHex(blockAlign, 2), leHex(lit(bits), 2),
-      lit("64617461"), leHex(dataSize, 4), payloadHex))
-  }
+    call_function("graft_wav_pcm_bytes", sampleRate.cast("int"),
+      channels.cast("int"), nSamples.cast("int"), docId.cast("long"))
 
   /** REAL signal statistics over a canonical 16-bit PCM WAV payload:
     * decodes every sample (little-endian two's complement — value ≥
@@ -323,32 +297,11 @@ object Multimodal {
           / nVals.cast("double")), 4).as("rms")))
   }
 
-  /** Signed 16-bit PCM sample at flat index `j` of a canonical WAV —
-    * the ROW-SHAPED decode: fingerprint pipelines explode sample
-    * indices to rows and read one sample per row, so framing/lag
-    * logic runs as ordinary windows over (audio, j) instead of giant
-    * in-plan HOF lambdas (the q140 lesson applied to audio), and the
-    * shape scales by partitioning on audio id. */
-  def pcmSampleAt(media: Column, j: Column): Column = {
-    val raw = leUIntAt(media, lit(45L) + j.cast("long") * 2, 2)
-    raw - when(raw >= 32768, lit(65536L)).otherwise(lit(0L))
-  }
-
   /** ALL signed 16-bit PCM samples of a canonical WAV as `array<int>`
     * — the bulk-decode shape: one native call per clip
-    * (`graft_pcm_samples`, codegen'd primitive-array pass) instead of
-    * one interpreted [[pcmSampleAt]] lambda per sample, which at 512
-    * samples × corpus scale was 70 % of q262's wall time. Falls back
-    * to the bit-identical composed form (a `transform` of
-    * [[pcmSampleAt]] over the payload length) when the extension
-    * isn't installed. */
+    * (`graft_pcm_samples`, codegen'd primitive-array pass). */
   def pcmSamples(media: Column): Column =
-    if (graft.expressions.GraftExtensions.hasFunction("graft_pcm_samples"))
-      call_function("graft_pcm_samples", media)
-    else
-      transform(
-        sequence(lit(0), ((octet_length(media) - 44) / 2).cast("int") - 1),
-        j => pcmSampleAt(media, j).cast("int"))
+    call_function("graft_pcm_samples", media)
 
   /** Whole-clip envelope fingerprint: frame the PCM payload into
     * `frameLen`-sample frames and pack [energy-gradient |
@@ -356,37 +309,9 @@ object Multimodal {
     * bit f = e(f+1)>e(f), bit f+T = z(f+1)>z(f); z counts
     * WITHIN-frame (s≥0) flips). NULL below two full frames. One
     * codegen'd native call per clip (`graft_audio_fp`) — the map-only
-    * shape that replaces a per-sample explode + two windows; falls
-    * back to a bit-identical (and much slower — per-sample
-    * interpreted lambdas) HOF composition without the extension. */
+    * shape that replaces a per-sample explode + two windows. */
   def audioEnvelopeFp(media: Column, frameLen: Int): Column =
-    if (graft.expressions.GraftExtensions.hasFunction("graft_audio_fp"))
-      call_function("graft_audio_fp", media, lit(frameLen))
-    else {
-      val sm = pcmSamples(media)
-      val at = (k: Column) => element_at(sm, (k + 1).cast("int"))
-      val e = (f: Column) => aggregate(
-        sequence(f * frameLen, f * frameLen + (frameLen - 1)),
-        lit(0L), (acc, j) => acc + at(j).cast("long") * at(j))
-      // frameLen=1 has no within-frame sample pair — z is identically 0
-      // (the HOF sequence would otherwise auto-step DOWNWARD)
-      val z = (f: Column) =>
-        if (frameLen < 2) lit(0L)
-        else aggregate(
-          sequence(f * frameLen + 1, f * frameLen + (frameLen - 1)),
-          lit(0L), (acc, j) =>
-            acc + when((at(j) >= 0) =!= (at(j - 1) >= 0), 1L).otherwise(0L))
-      val t = (size(sm) / lit(frameLen)).cast("int") - 1
-      // Horner form: f = t−1 enters first, so acc·2 lands bit f at
-      // position f (shiftleft needs a literal distance)
-      val bitsOf = (pred: Column => Column) =>
-        aggregate(sequence(t - 1, lit(0), lit(-1)), lit(0L),
-          (acc, f) => acc * 2 + when(pred(f), 1L).otherwise(0L))
-      when(t >= 1,
-        bitsOf(f => e(f + 1) > e(f)) +
-          bitsOf(f => z(f + 1) > z(f)) *
-            pow(lit(2.0), t.cast("double")).cast("long"))
-    }
+    call_function("graft_audio_fp", media, lit(frameLen))
 
   /** Strided decimation stats over a canonical 16-bit mono PCM WAV —
     * the audio twin of the q190 image resize: keep every `factor`-th

@@ -2002,7 +2002,7 @@ object PipelineQueries {
       val sliced = Tables.embeddings(s, dir).select(col("vec_id"),
         slice(col("embedding"), 1, d).as("embedding"))
       Similarity.cosineTopK(sliced, "vec_id", "embedding",
-        sliced.filter(col("vec_id") < 8), k = 5, dim = d)
+        sliced.filter(col("vec_id") < 8), k = 5)
     }
     def pairs(df: DataFrame) = df.select(col("query_id"), col("neighbor_id"))
     val joined = cosineTopK(s, dir)
@@ -4491,7 +4491,7 @@ object PipelineQueries {
         col("embedding").as("cvec"), col("label"))
       .crossJoin(broadcast(queries))
       .filter(col("label") =!= col("qlabel"))
-      .withColumn("sim", Similarity.pairDot(emb, col("qvec"), col("cvec"), 64))
+      .withColumn("sim", Similarity.pairDot(col("qvec"), col("cvec")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
       .select("query_id", "neighbor_id", "rnk")
@@ -4869,7 +4869,7 @@ object PipelineQueries {
       col("label").as("lb"))
     val pairs = a.crossJoin(broadcast(b)).filter(col("ia") < col("ib"))
       .select(M.oracleRound(
-          Similarity.pairDot(emb, col("va"), col("vb"), 64), 4).as("score"),
+          Similarity.pairDot(col("va"), col("vb")), 4).as("score"),
         (col("la") === col("lb")).as("pos"))
     // average rank per tied score group from the cumulative counts:
     // ranks occupied by a group of size n ending at cumulative c are
@@ -5075,7 +5075,7 @@ object PipelineQueries {
     val sliced = Tables.embeddings(s, dir).select(col("vec_id"),
       slice(col("embedding"), 1, 32).as("embedding"))
     val prefix = Similarity.cosineTopK(sliced, "vec_id", "embedding",
-      sliced.filter(col("vec_id") < 8), k = rboK, dim = 32)
+      sliced.filter(col("vec_id") < 8), k = rboK)
     val w = array(rboNanoWeights.map(lit): _*)
     exact.withColumnRenamed("rnk", "rnk_full")
       .join(prefix.withColumnRenamed("rnk", "rnk_prefix"),

@@ -22,26 +22,16 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  /** Unrolled dot product for a KNOWN dimension: a flat 2·dim-term
-    * codegen expression with no intermediate array allocation — the
-    * hot-pair-loop variant (zip_with+aggregate allocates an ArrayData
-    * per pair, which dominates at millions of pairs). Left-to-right
-    * summation order matches [[dot]] and the SQL oracles exactly. */
-  def dotUnrolled(a: Column, b: Column, dim: Int): Column =
-    (0 until dim).map(i => a.getItem(i) * b.getItem(i)).reduce(_ + _)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Pair-loop dot product: the native codegen'd [[graft.expressions.DotProduct]]
-    * when the session has GraftExtensions installed (a single tight
-    * loop), else the unrolled built-in composition — numerically
-    * identical (same left-to-right summation). */
-  def pairDot(df: DataFrame, a: Column, b: Column, dim: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_dot"))
-      call_function("graft_dot", a, b)
-    else dotUnrolled(a, b, dim)
+  /** Pair-loop dot product: the native codegen'd
+    * [[graft.expressions.DotProduct]] (`graft_dot`), one tight loop with
+    * no intermediate array (zip_with+aggregate allocates an ArrayData
+    * per pair, which dominates at millions of pairs). Left-to-right
+    * summation order matches [[dot]] and the SQL oracles exactly. */
+  def pairDot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** L2-normalize once (O(d) per vector) so pair similarity is a bare
     * dot product — no per-pair norm recomputation. MUST be followed by
@@ -97,7 +87,7 @@ object Similarity {
     * downstream joins — a composition gated in its own right
     * (q467/q468), not just asserted here. */
   def cosineTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, dim: Int = 64,
+      queries: DataFrame, k: Int,
       preNormalized: Boolean = false, maxPairs: Long = 2000000000L): DataFrame = {
     // cap counts run on the RAW inputs, before the normalize/barrier
     // prep: prep doesn't change row counts, and a bare count over a
@@ -120,7 +110,7 @@ object Similarity {
         "deliberately.")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", pairDot(corpus, col("qvec"), col("cvec"), dim))
+      .withColumn("sim", pairDot(col("qvec"), col("cvec")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rnk", row_number().over(w))
@@ -152,48 +142,20 @@ object Similarity {
       .select("id_a", "id_b", "rnk_ab", "rnk_ba")
   }
 
-  /** Deterministic md5-derived random hyperplanes (see
-    * [[graft.expressions.LshPlanes]] — reproducible in ANSI SQL as
+  /** All sign-random-projection band buckets in one column
+    * (`array<long>`, one bucket per band; band b uses plane seed
+    * `baseSeed + b` and is a `planesPerBand`-bit key where bit p =
+    * sign(vec · plane_p), so cosine-similar vectors collide with high
+    * probability): the native codegen'd [[graft.expressions.LshBuckets]]
+    * (`graft_lsh_buckets`), one plan node. The planes are md5-derived
+    * ([[graft.expressions.LshPlanes]]) and reproducible in ANSI SQL as
     * `('0x'||substr(md5(s),1,8))::BIGINT / 4294967296.0 - 0.5`, which
-    * makes LSH bucket assignments — and therefore the ANN query output —
-    * oracle-verifiable). */
-  private[operators] def planes(numPlanes: Int, dim: Int,
-      seed: Long): Array[Array[Double]] =
-    graft.expressions.LshPlanes.planes(numPlanes, dim, seed)
-
-  /** Sign-random-projection bucket id: `numPlanes`-bit key where bit p =
-    * sign(vec · plane_p). Cosine-similar vectors collide with high
-    * probability. Built-in composition — [[lshBucketsAll]] is the hot
-    * path. */
-  def lshBucket(vec: Column, numPlanes: Int, dim: Int, seed: Long = 42L): Column = {
-    val ps = planes(numPlanes, dim, seed)
-    (0 until numPlanes).map { p =>
-      val plane = array(ps(p).toIndexedSeq.map(lit): _*)
-      // coalesce per term: zip_with null-pads when vec.length != dim,
-      // and a bare product would null the whole dot (bucket 0 in every
-      // band) — the native LshBuckets expression and the SQL oracles
-      // both PARTIAL-SUM over the common prefix instead; keep the
-      // fallback bit-identical for malformed-length vectors too
-      val d = aggregate(zip_with(vec, plane, (x, y) => coalesce(x * y, lit(0.0))),
-        lit(0.0), (acc, x) => acc + x)
-      when(d > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** All band buckets in one column (`array<long>`, one bucket per
-    * band; band b uses plane seed `baseSeed + b`): the native codegen'd
-    * [[graft.expressions.LshBuckets]] when GraftExtensions is
-    * installed — one plan node instead of bands·planes·dim literal
-    * leaves (the literal tree cost seconds of optimizer time per query
-    * at 16×6×64) — else the bit-identical built-in composition. */
-  def lshBucketsAll(df: DataFrame, vec: Column, bands: Int,
-      planesPerBand: Int, dim: Int, baseSeed: Long = 42L): Column =
-    if (df.sparkSession.catalog.functionExists("graft_lsh_buckets"))
-      call_function("graft_lsh_buckets", vec,
-        lit(bands), lit(planesPerBand), lit(dim), lit(baseSeed))
-    else
-      array((0 until bands).map(b =>
-        lshBucket(vec, planesPerBand, dim, baseSeed + b)): _*)
+    * makes bucket assignments — and the ANN query output —
+    * oracle-verifiable. */
+  def lshBucketsAll(vec: Column, bands: Int, planesPerBand: Int, dim: Int,
+      baseSeed: Long = 42L): Column =
+    call_function("graft_lsh_buckets", vec,
+      lit(bands), lit(planesPerBand), lit(dim), lit(baseSeed))
 
   /** ANN top-k with **multi-probe**: candidates come from the query's
     * own LSH bucket plus every bucket at hamming distance 1 (each
@@ -209,17 +171,17 @@ object Similarity {
       preNormalized: Boolean = false): DataFrame = {
     val c = prep(corpus, idCol, vecCol, "neighbor_id", "cvec", preNormalized)
       .withColumn("bucket",
-        element_at(lshBucketsAll(corpus, col("cvec"), 1, numPlanes, dim), 1))
+        element_at(lshBucketsAll(col("cvec"), 1, numPlanes, dim), 1))
     val probeCols = lit(0L) +: (0 until numPlanes).map(p => lit(1L << p))
     val q = prep(queries, idCol, vecCol, "query_id", "qvec", preNormalized)
       .withColumn("bucket0",
-        element_at(lshBucketsAll(corpus, col("qvec"), 1, numPlanes, dim), 1))
+        element_at(lshBucketsAll(col("qvec"), 1, numPlanes, dim), 1))
       .withColumn("bucket", explode(array(probeCols.map(col("bucket0").bitwiseXOR(_)): _*)))
       .drop("bucket0")
     val cands = c.join(broadcast(q), Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    val scored = cands.withColumn("sim", pairDot(corpus, col("qvec"), col("cvec"), dim))
+    val scored = cands.withColumn("sim", pairDot(col("qvec"), col("cvec")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rnk", row_number().over(w))
@@ -247,7 +209,7 @@ object Similarity {
     * the bounded scales this operator is legal for, one more
     * normalize pass is noise. */
   def cosineSimJoin(corpus: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, dim: Int = 64,
+      threshold: Double,
       preNormalized: Boolean = false, maxRows: Long = 200000L): DataFrame = {
     val n = prep(corpus, idCol, vecCol, "__id", "nvec", preNormalized)
     val cnt = n.count()
@@ -262,7 +224,7 @@ object Similarity {
     a.crossJoin(b)
       .filter(col("id_a") < col("id_b"))
       .withColumn("cos",
-        MysqlFunctions.oracleRound(pairDot(corpus, col("va"), col("vb"), dim), 4))
+        MysqlFunctions.oracleRound(pairDot(col("va"), col("vb")), 4))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
   }
@@ -282,26 +244,14 @@ object Similarity {
     aggregate(zip_with(vec, ctr, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Nearest cell per corpus row: argmin over the centroid matrix,
-    * ties pinned by cell index. Native [[graft.expressions.ProbeCells]]
-    * with nprobe=1 when registered (one tight loop instead of an
-    * nlist-element HOF distance array per row — the assignment pass is
-    * n×nlist, the biggest per-row cost of every Lloyd round), else the
-    * built-in distance-array argmin (array_position returns the FIRST
-    * match, equal to min-by-(distance², cell)) — bit-identical
-    * semantics (same left-to-right Σ(x−c)², same strict-less
-    * first-lowest-cell tie rule). Adds `cell` as a projected column. */
+  /** Nearest cell per corpus row: argmin over the centroid matrix by
+    * (distance², cell) — [[probeCellsCol]] with nprobe=1, one tight loop
+    * instead of an nlist-element HOF distance array per row (the
+    * assignment pass is n×nlist, the biggest per-row cost of every
+    * Lloyd round). Adds `cell` as a projected column. */
   private def assignCells(c: DataFrame, vecCol: String,
       centers: Array[Array[Double]]): DataFrame =
-    if (c.sparkSession.catalog.functionExists("graft_probe_cells"))
-      c.withColumn("cell", element_at(
-        call_function("graft_probe_cells", col(vecCol),
-          centersLit(centers), lit(1)), 1))
-    else {
-      val dists = transform(centersLit(centers), ctr => sqDist(col(vecCol), ctr))
-      c.withColumn("cell",
-        (array_position(dists, array_min(dists)) - 1).cast("int"))
-    }
+    c.withColumn("cell", element_at(probeCellsCol(col(vecCol), centers, 1), 1))
 
   /** Fixed-iteration Lloyd coarse quantizer fit, shared by [[ivfTopK]]
     * and [[semanticNearDupPairs]]: init = the `nlist` vectors with the
@@ -443,19 +393,14 @@ object Similarity {
     val centers = fittedCenters.getOrElse(
       fitQuantizer(c, "neighbor_id", "cvec", nlist, dim, seed, iters))
     val assigned = assignCells(c, "cvec", centers)
-    // per-query nprobe nearest cells, map-only like the assignment:
-    // (distance², cell) structs sort in natural struct order — distance
-    // first, ties by cell index — and the nprobe head explodes into
-    // probe rows (no window, no join)
-    val q0 = prep(queries, idCol, vecCol, "query_id", "qvec", preNormalized)
-    val probeStructs = transform(centersLit(centers),
-      (ctr, i) => struct(sqDist(col("qvec"), ctr).as("d"), i.cast("int").as("cell")))
-    val q = q0
-      .withColumn("__probe", explode(slice(array_sort(probeStructs), 1, nprobe)))
-      .select(col("query_id"), col("qvec"), col("__probe.cell").as("cell"))
+    // per-query nprobe nearest cells, map-only like the assignment,
+    // exploded into probe rows (no window, no join)
+    val q = prep(queries, idCol, vecCol, "query_id", "qvec", preNormalized)
+      .select(col("query_id"), col("qvec"),
+        explode(probeCellsCol(col("qvec"), centers, nprobe)).as("cell"))
     val scored = assigned.join(broadcast(q), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", pairDot(corpus, col("qvec"), col("cvec"), dim))
+      .withColumn("sim", pairDot(col("qvec"), col("cvec")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rnk", row_number().over(w))
@@ -479,20 +424,11 @@ object Similarity {
   /** Per-row probe list: the `nprobe` nearest cells of the fitted
     * coarse quantizer, ordered by (squared distance, cell) — element 0
     * is the row's own assignment cell. Native codegen'd
-    * [[graft.expressions.ProbeCells]] when GraftExtensions is
-    * installed, else the bit-identical built-in composition
-    * ([[ivfTopK]]'s struct-sort probe pattern). */
-  private def probeCellsCol(df: DataFrame, vec: Column,
-      centers: Array[Array[Double]], nprobe: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_probe_cells"))
-      call_function("graft_probe_cells", vec, centersLit(centers), lit(nprobe))
-    else
-      transform(
-        slice(array_sort(transform(centersLit(centers),
-          (ctr, i) => struct(sqDist(vec, ctr).as("d"),
-            i.cast("int").as("cell")))),
-          1, nprobe),
-        p => p.getField("cell"))
+    * [[graft.expressions.ProbeCells]] (`graft_probe_cells`): one
+    * map-only tight loop, no per-row struct array or sort. */
+  private def probeCellsCol(vec: Column, centers: Array[Array[Double]],
+      nprobe: Int): Column =
+    call_function("graft_probe_cells", vec, centersLit(centers), lit(nprobe))
 
   /** IVF self-kNN: exact-within-probed-cells top-k cosine neighbors
     * for EVERY corpus vector — the index-backed leg that replaces
@@ -544,14 +480,14 @@ object Similarity {
       fitQuantizer(fit, "neighbor_id", "cvec", nlist, dim, seed, iters)
     }
     val probed = c.withColumn("__probes",
-      probeCellsCol(c, col("cvec"), centers, nprobe))
+      probeCellsCol(col("cvec"), centers, nprobe))
     val posting = probed.select(col("neighbor_id"), col("cvec"),
       element_at(col("__probes"), 1).as("cell"))
     val queries = probed.select(col("neighbor_id").as("query_id"),
       col("cvec").as("qvec"), explode(col("__probes")).as("cell"))
     val scored = posting.join(queries, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", pairDot(corpus, col("qvec"), col("cvec"), dim))
+      .withColumn("sim", pairDot(col("qvec"), col("cvec")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rnk", row_number().over(w))
@@ -576,7 +512,7 @@ object Similarity {
     val c = prep(corpus, idCol, vecCol, "__id", "nvec", preNormalized)
     // per-band plane set via distinct seeds (42+band); one posexplode
     // row per band
-    val bucketArr = lshBucketsAll(corpus, col("nvec"), bands, planesPerBand, dim)
+    val bucketArr = lshBucketsAll(col("nvec"), bands, planesPerBand, dim)
     // Candidate generation runs on BARE (id, band, bucket) rows — the
     // bucket self-join and the pair dedup shuffle only ids, never the
     // dim-sized vectors (carrying both vectors through dropDuplicates
@@ -597,7 +533,7 @@ object Similarity {
       .join(c.select(col("__id").as("id_a"), col("nvec").as("va")), Seq("id_a"))
       .join(c.select(col("__id").as("id_b"), col("nvec").as("vb")), Seq("id_b"))
       .withColumn("cos",
-        MysqlFunctions.oracleRound(pairDot(corpus, col("va"), col("vb"), dim), 4))
+        MysqlFunctions.oracleRound(pairDot(col("va"), col("vb")), 4))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
   }
@@ -656,7 +592,7 @@ object Similarity {
       iters: Int = 3, preNormalized: Boolean = false): DataFrame = {
     val c = semPrep(corpus, idCol, vecCol, preNormalized)
     val centers = fitQuantizer(c, "__id", "nvec", nlist, dim, seed, iters)
-    inCellVerifiedPairs(corpus, c, centers, threshold, dim)
+    inCellVerifiedPairs(c, centers, threshold)
   }
 
   /** [[semanticNearDupPairs]] with the CORPUS-KEYED cell count — the
@@ -688,7 +624,7 @@ object Similarity {
           .select("__id", "nvec")
       }
     val centers = fitQuantizer(fit, "__id", "nvec", nlist, dim, seed, iters)
-    inCellVerifiedPairs(corpus, c, centers, threshold, dim)
+    inCellVerifiedPairs(c, centers, threshold)
   }
 
   private def semPrep(corpus: DataFrame, idCol: String, vecCol: String,
@@ -702,15 +638,15 @@ object Similarity {
 
   /** The shared SemDeDup tail: assign cells, self-join within cell,
     * verify exact cosine ≥ threshold (4-dp-pinned). */
-  private def inCellVerifiedPairs(corpus: DataFrame, c: DataFrame,
-      centers: Array[Array[Double]], threshold: Double, dim: Int): DataFrame = {
+  private def inCellVerifiedPairs(c: DataFrame,
+      centers: Array[Array[Double]], threshold: Double): DataFrame = {
     val assigned = assignCells(c, "nvec", centers)
     assigned.select(col("cell"), col("__id").as("id_a"), col("nvec").as("va"))
       .join(assigned.select(col("cell"), col("__id").as("id_b"),
         col("nvec").as("vb")), Seq("cell"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("cos",
-        MysqlFunctions.oracleRound(pairDot(corpus, col("va"), col("vb"), dim), 4))
+        MysqlFunctions.oracleRound(pairDot(col("va"), col("vb")), 4))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
   }
@@ -742,7 +678,7 @@ object Similarity {
     * the quantized full scan is too much. Quantization happens on the
     * (normalized) vectors the cosine ranking uses. */
   def quantizedTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, refine: Int = 20, dim: Int = 64,
+      queries: DataFrame, k: Int, refine: Int = 20,
       preNormalized: Boolean = false): DataFrame = {
     val c = int8Quantize(
       prep(corpus, idCol, vecCol, "neighbor_id", "cvec", preNormalized),
@@ -762,7 +698,7 @@ object Similarity {
     val cands = approx.withColumn("__ar", row_number().over(wa))
       .filter(col("__ar") <= k * refine)
     val scored = cands.withColumn("sim",
-      pairDot(corpus, col("qvec"), col("cvec"), dim))
+      pairDot(col("qvec"), col("cvec")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rnk", row_number().over(w))
@@ -1062,7 +998,7 @@ object Similarity {
     val cands = approx.withColumn("__ar", row_number().over(wa))
       .filter(col("__ar") <= k * refine)
     val scored = cands.withColumn("sim",
-      pairDot(corpus, col("qvec"), col("cvec"), dim))
+      pairDot(col("qvec"), col("cvec")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rnk", row_number().over(w))
@@ -1108,16 +1044,12 @@ object Similarity {
       fitCodebooks(c, "neighbor_id", "cvec", m, ksub, dsub, pqSeed, iters))
     val coded = assignCells(c, "cvec", centers)
       .withColumn("codes", pqCodes(col("cvec"), books, m, dsub))
-    // query side: nprobe nearest cells (q53's map-only struct-sort
-    // probe) + the per-query ADC LUT, exploded to one row per probe
-    val q0 = prep(queries, idCol, vecCol, "query_id", "qvec", preNormalized)
-    val probeStructs = transform(centersLit(centers),
-      (ctr, i) => struct(sqDist(col("qvec"), ctr).as("d"), i.cast("int").as("cell")))
-    val q = q0
-      .withColumn("__lut", adcLut(col("qvec"), books, m, dsub))
-      .withColumn("__probe", explode(slice(array_sort(probeStructs), 1, nprobe)))
-      .select(col("query_id"), col("qvec"), col("__lut"),
-        col("__probe.cell").as("cell"))
+    // query side: nprobe nearest cells (map-only, like q53's probe) +
+    // the per-query ADC LUT, exploded to one row per probe
+    val q = prep(queries, idCol, vecCol, "query_id", "qvec", preNormalized)
+      .select(col("query_id"), col("qvec"),
+        adcLut(col("qvec"), books, m, dsub).as("__lut"),
+        explode(probeCellsCol(col("qvec"), centers, nprobe)).as("cell"))
     val approx = coded.join(broadcast(q), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("asim", adcSim(col("__lut"), col("codes"), m, ksub))
@@ -1126,7 +1058,7 @@ object Similarity {
     val cands = approx.withColumn("__ar", row_number().over(wa))
       .filter(col("__ar") <= k * refine)
     val scored = cands.withColumn("sim",
-      pairDot(corpus, col("qvec"), col("cvec"), dim))
+      pairDot(col("qvec"), col("cvec")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rnk", row_number().over(w))

@@ -700,28 +700,15 @@ object TextCorpus {
   private[graft] def bpeFit(df: DataFrame, textCol: String, rounds: Int)
       : (Seq[(Int, Int, Int, Long, Long)], Column) = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Long, Long)]
-    // pair scan: native one-walk-per-row count map when the session
-    // has GraftExtensions ([[graft.expressions.PairCounts]] — the
-    // interpreted per-character HOF lambda was q160's whole cost);
-    // bit-identical built-in composition otherwise (property-tested
-    // equal in FunctionsSpec). Both shapes end in the same
-    // bounded-alphabet pair aggregate.
-    val native = graft.expressions.GraftExtensions
-      .hasFunction("graft_pair_counts")
+    // pair scan: native one-walk-per-row count map
+    // ([[graft.expressions.PairCounts]]), then one bounded-alphabet
+    // pair aggregate
     var cur: Column = col(textCol)
     for (r <- 0 until rounds) {
-      val pairs =
-        if (native)
-          df.select(explode(call_function("graft_pair_counts", cur))
-              .as(Seq("pair", "__c")))
-            .groupBy("pair").agg(sum(col("__c").cast("long")).as("cnt"))
-        else
-          df.select(cur.as("__t"))
-            .filter(length(col("__t")) >= 2)
-            .select(explode(expr(
-              "transform(sequence(1, length(__t) - 1), i -> substring(__t, i, 2))"))
-              .as("pair"))
-            .groupBy("pair").agg(count(lit(1)).as("cnt"))
+      val pairs = df
+        .select(explode(call_function("graft_pair_counts", cur))
+          .as(Seq("pair", "__c")))
+        .groupBy("pair").agg(sum(col("__c").cast("long")).as("cnt"))
       val best = pairs.orderBy(col("cnt").desc, col("pair").asc)
         .limit(1).collect()(0)
       val bp = best.getString(0)

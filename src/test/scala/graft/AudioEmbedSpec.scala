@@ -41,9 +41,8 @@ class AudioEmbedSpec extends AnyFunSuite {
     val rows = Seq((7L, 16000, 512), (7L, 44100, 512), (0L, 8000, 33),
         (12345L, 22050, 64)).toDF("doc_id", "rate", "n")
       .select(
-        call_function("graft_wav_pcm_bytes", col("rate"), lit(1),
-          col("n"), col("doc_id")).as("nat"),
-        M.wavBytesPcmComposed(col("rate"), lit(1), col("n"),
+        M.wavBytesPcm(col("rate"), lit(1), col("n"), col("doc_id")).as("nat"),
+        MultimodalReference.wavBytesPcm(col("rate"), lit(1), col("n"),
           col("doc_id")).as("comp"))
       .as[(Array[Byte], Array[Byte])].collect()
     rows.foreach { case (nat, comp) =>
@@ -60,19 +59,16 @@ class AudioEmbedSpec extends AnyFunSuite {
       .select(
         call_function("graft_pcm_samples", col("w")).as("nat"),
         transform(sequence(lit(0), col("n") - 1),
-          j => M.pcmSampleAt(col("w"), j).cast("int")).as("comp"))
+          j => MultimodalReference.pcmSampleAt(col("w"), j).cast("int")).as("comp"))
       .as[(Seq[Int], Seq[Int])].collect()
     rows.foreach { case (nat, comp) => assert(nat == comp) }
   }
 
-  test("native graft_audio_fp matches the HOF fallback; NULL below two frames") {
+  test("native graft_audio_fp matches an in-JVM recompute; NULL below two frames") {
     val M = graft.operators.Multimodal
     val wav = M.wavBytesPcm(lit(16000), lit(1), col("n"), col("doc_id"))
-    // fallback forced by composing on the session-registered native
-    // pcm reader but the pure-Column Horner fingerprint: re-derive it
-    // by calling audioEnvelopeFp's else-branch shape via a session
-    // WITHOUT the function is impractical here, so instead pin the
-    // native value against an independent in-JVM recompute
+    // the reference is an independent in-JVM recompute of the energy
+    // and zero-crossing gradient bits from the container bytes
     val rows = Seq((5L, 512), (17L, 512), (5L, 63), (5L, 33))
       .toDF("doc_id", "n")
       .select(col("doc_id"), col("n"), wav.as("w"))

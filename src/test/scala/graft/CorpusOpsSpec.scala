@@ -47,7 +47,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(out == Map(1L -> 2L, 3L -> 1L))
   }
 
-  test("bloomDecontaminate is row-identical to the plain scan (both probe paths) and narrows") {
+  test("bloomDecontaminate is row-identical to the exact scan and narrows") {
     import graft.operators.{Dedup, PipelineQueries}
     import graft.sources.Tables
     // real corpus slice: bench = docs < 20, corpus = the rest (q61's split)
@@ -59,18 +59,11 @@ class CorpusOpsSpec extends AnyFunSuite {
     val plain = CorpusOps.decontaminateFromSets(corpus, bench, "doc_id")
       .as[(Long, Long)].collect().toMap
     assert(plain.nonEmpty, "fixture must have overlap or the test is vacuous")
-    // native (codegen'd BloomFilterMightContain) path — the gate shape
-    assert(spark.catalog.functionExists("graft_bloom_contains"))
+    // native codegen'd BloomFilterMightContain probe — the gate shape
     val bloom = CorpusOps.bloomDecontaminateFromSets(
         corpus, bench, "doc_id", expectedItems = 10000L)
       .as[(Long, Long)].collect().toMap
     assert(bloom == plain, "bloom-prefiltered result diverged from the exact scan")
-    // fallback (no-extensions UDF) path: same filter bytes, same rows
-    val fb = CorpusOps.bloomDecontaminateFromSets(
-        corpus, bench, "doc_id", expectedItems = 10000L,
-        forceFallbackProbe = true)
-      .as[(Long, Long)].collect().toMap
-    assert(fb == plain, "fallback probe diverged from the native probe")
     // the split must leave clean docs, else narrowing is unobservable
     assert(plain.size < corpus.count(),
       "split leaves no clean docs; narrowing unobservable")
@@ -1095,7 +1088,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       .crossJoin(broadcast(queries))
       .filter(col("label") =!= col("qlabel"))
       .withColumn("sim",
-        graft.operators.Similarity.pairDot(norm, col("qvec"), col("cvec"), 4))
+        graft.operators.Similarity.pairDot(col("qvec"), col("cvec")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 2)
       .select("neighbor_id", "rnk").as[(Long, Int)].collect().toSet

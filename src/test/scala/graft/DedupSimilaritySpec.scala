@@ -189,13 +189,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("cosineTopK: nearest neighbor is the planted close vector") {
     val top1 = Similarity.cosineTopK(emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") === 0), k = 1, dim = 4)
+        emb.filter(col("vec_id") === 0), k = 1)
       .as[(Long, Long, Int)].collect()
     assert(top1.toSeq == Seq((0L, 1L, 1)))
   }
 
   test("cosineSimJoin matches brute-force pairs above threshold") {
-    val got = Similarity.cosineSimJoin(emb, "vec_id", "embedding", 0.8, dim = 4)
+    val got = Similarity.cosineSimJoin(emb, "vec_id", "embedding", 0.8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(got == Set((0L, 1L), (2L, 3L)))
   }
@@ -206,25 +206,25 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // caller to the index legs
     val e = intercept[IllegalArgumentException] {
       Similarity.cosineTopK(emb, "vec_id", "embedding", emb, k = 1,
-        dim = 4, maxPairs = 10)
+        maxPairs = 10)
     }
     assert(e.getMessage.contains("annTopK"))
     // at the cap exactly it still runs
     assert(Similarity.cosineTopK(emb, "vec_id", "embedding", emb, k = 1,
-      dim = 4, maxPairs = 25).count() == 5)
+      maxPairs = 25).count() == 5)
   }
 
   test("cosineSimJoin fails fast above the quadratic-stage row cap") {
     // the bounded-corpus contract is enforced BEFORE any N² stage
     // launches: the call itself throws, there is no job to cancel
     val e = intercept[IllegalArgumentException] {
-      Similarity.cosineSimJoin(emb, "vec_id", "embedding", 0.8, dim = 4,
+      Similarity.cosineSimJoin(emb, "vec_id", "embedding", 0.8,
         maxRows = 3)
     }
     assert(e.getMessage.contains("cap"))
     // at the cap exactly, the operator still runs (emb has 5 rows)
     val ok = Similarity.cosineSimJoin(emb, "vec_id", "embedding", 0.8,
-      dim = 4, maxRows = 5)
+      maxRows = 5)
     assert(ok.count() == 2)
   }
 
@@ -244,7 +244,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       Seq.fill(64)(rng.nextGaussian()))).toDF("a", "b")
     val pairs = vecs.select(
       call_function("graft_dot", col("a"), col("b")).as("native"),
-      Similarity.dotUnrolled(col("a"), col("b"), 64).as("unrolled"))
+      SimilarityReference.dotUnrolled(col("a"), col("b"), 64).as("unrolled"))
       .as[(Double, Double)].collect()
     pairs.foreach { case (n, u) => assert(n == u) }
     // null input -> null
@@ -266,7 +266,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val ivf = Similarity.ivfTopK(corpus, "vec_id", "embedding", queries,
       k = 5, nlist = 10, nprobe = 2, dim = 16)
     val exact = Similarity.cosineTopK(corpus, "vec_id", "embedding", queries,
-      k = 5, dim = 16)
+      k = 5)
     val a = ivf.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val e = exact.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (a intersect e).size.toDouble / e.size
@@ -286,7 +286,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val pq = Similarity.pqTopK(corpus, "vec_id", "embedding", queries,
       k = 5, m = 4, ksub = 8, refine = 10, dim = 16)
     val exact = Similarity.cosineTopK(corpus, "vec_id", "embedding", queries,
-      k = 5, dim = 16)
+      k = 5)
     val a = pq.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val e = exact.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (a intersect e).size.toDouble / e.size
@@ -310,7 +310,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val ivfpq = Similarity.ivfPqTopK(corpus, "vec_id", "embedding", queries,
       k = 5, nlist = 8, nprobe = 2, m = 4, ksub = 8, refine = 10, dim = 16)
     val exact = Similarity.cosineTopK(corpus, "vec_id", "embedding", queries,
-      k = 5, dim = 16)
+      k = 5)
     val a = ivfpq.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val e = exact.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (a intersect e).size.toDouble / e.size
@@ -416,10 +416,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
       call_function("graft_lsh_buckets", col("v"),
         lit(16), lit(6), lit(64), lit(42L)).as("b"))
       .as[(Long, Seq[Long])].collect().toMap
-    // fallback composition: per-band lshBucket over literal planes
+    // reference composition: per-band lshBucket over literal planes
     val composed = vecs.select(col("id"),
       array((0 until 16).map(b =>
-        Similarity.lshBucket(col("v"), 6, 64, seed = 42L + b)): _*).as("b"))
+        SimilarityReference.lshBucket(col("v"), 6, 64, seed = 42L + b)): _*).as("b"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(native == composed)
   }
@@ -440,7 +440,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         threshold = 0.95, bands = 16, planesPerBand = 6, dim = 32)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val exact = Similarity.cosineSimJoin(corpus, "vec_id", "embedding",
-        threshold = 0.95, dim = 32)
+        threshold = 0.95)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(lsh == exact)
     assert(exact.size == 20 * 10, "every in-cluster pair qualifies")
@@ -494,8 +494,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("winnowedDupPairs: native one-pass winnow is row-identical to the builtin composition") {
     import graft.operators.Dedup
-    import graft.functions.TextFunctions
-    assert(spark.catalog.functionExists("graft_winnow"))
     val rng = new scala.util.Random(37)
     def rand(n: Int) = Seq.fill(n)(('a' + rng.nextInt(26)).toChar).mkString
     val shared = rand(80)
@@ -507,11 +505,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (5L, "héllo wörld " * 50 + shared),  // multibyte: substring path
       (6L, rand(55)))                      // barely windows
       .toDF("doc_id", "text")
-    def run(builtin: Boolean) =
-      Dedup.winnowedDupPairs(docs, "doc_id", "text",
-          forceBuiltinWinnow = builtin)
-        .as[(Long, Long, Long)].collect().toSet
-    assert(run(false) == run(true),
+    val pairs = Dedup.winnowedDupPairs(docs, "doc_id", "text")
+      .as[(Long, Long, Long)].collect().toSet
+    val builtinPairs = DedupReference.winnowedDupPairs(docs, "doc_id", "text",
+        gram = 50, window = 10, maxDf = 1000)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(pairs.nonEmpty, "fixture plants shared runs; no pairs is vacuous")
+    assert(pairs == builtinPairs,
       "native winnow diverged from the builtin composition on pairs")
     // and at the raw selection level: the expression's encodings equal
     // the builtin hash+window-min+distinct per document (sets — the
@@ -522,18 +522,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
           col("text"), lit(50), lit(10))).as("m"))
       .as[(Long, Long)].collect().groupBy(_._1).view
       .mapValues(_.map(_._2).toSet).toMap
-    val builtinSel = docs
-      .filter(length(col("text")) >= 50)
-      .select(col("doc_id"),
-        explode(sequence(lit(1), length(col("text")) - 49)).as("i"),
-        col("text"))
-      .select(col("doc_id"), col("i"),
-        (TextFunctions.md5Int(substr(col("text"), col("i"), lit(50)), 10)
-          * lit(8388608L) + col("i")).as("enc"))
-      .withColumn("m", min(col("enc")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-          .orderBy("i").rowsBetween(0, 9)))
-      .select(col("doc_id"), col("m")).distinct()
+    val builtinSel = DedupReference
+      .winnowEncodings(docs, "doc_id", "text", gram = 50, window = 10)
       .as[(Long, Long)].collect().groupBy(_._1).view
       .mapValues(_.map(_._2).toSet).toMap
     assert(sel == builtinSel,
@@ -598,7 +588,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         threshold = 0.95, nlist = 8, dim = 32, iters = 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val exact = Similarity.cosineSimJoin(corpus, "vec_id", "embedding",
-        threshold = 0.95, dim = 32)
+        threshold = 0.95)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(sem.subsetOf(exact), "cell blocking must never invent a pair")
     assert(exact.size == 8 * 15, "every in-cluster pair qualifies")
@@ -613,10 +603,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (i, Seq.fill(16)(rng.nextGaussian().toFloat))).toDF("vec_id", "embedding")
     val norm = Similarity.normalizeCorpus(emb2, "vec_id", "embedding")
     val inline = Similarity.cosineSimJoin(emb2, "vec_id", "embedding",
-        threshold = -1.0, dim = 16)
+        threshold = -1.0)
       .as[(Long, Long, Double)].collect().toSet
     val pre = Similarity.cosineSimJoin(norm, "vec_id", "embedding",
-        threshold = -1.0, dim = 16, preNormalized = true)
+        threshold = -1.0, preNormalized = true)
       .as[(Long, Long, Double)].collect().toSet
     assert(pre == inline, "every pair cosine must match bit-for-bit")
     val annInline = Similarity.annTopK(emb2, "vec_id", "embedding",
@@ -676,7 +666,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         k = 5, numPlanes = 6, dim = 16)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val exactC = Similarity.cosineTopK(clustered, "vec_id", "embedding", cq,
-        k = 5, dim = 16)
+        k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (approxC intersect exactC).size.toDouble / exactC.size
     assert(recall >= 0.8, s"multi-probe recall $recall on clustered corpus")

@@ -180,6 +180,30 @@ class FunctionsSpec extends AnyFunSuite {
     assert(plain.toSeq == got.toSeq)
   }
 
+  test("columns built with no active session analyze to the native expressions") {
+    import org.apache.spark.sql.SparkSession
+    import graft.expressions.{Md5PrefixLong, NfcNormalize, PcmSamples}
+    // a Column is built before any session analyzes it; with no session
+    // active on this thread it must still hold the native call
+    val prev = SparkSession.getActiveSession
+    SparkSession.clearActiveSession()
+    val cols =
+      try Seq(T.md5Int(col("s"), 8), T.nfc(col("s")),
+        graft.operators.Multimodal.pcmSamples(col("w")))
+      finally prev.foreach(SparkSession.setActiveSession)
+    val df = Seq(("cafe\u0301", Array.fill[Byte](48)(1))).toDF("s", "w")
+      .select(cols: _*)
+    val nodes = df.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case _: Md5PrefixLong => "md5"
+      case _: NfcNormalize => "nfc"
+      case _: PcmSamples => "pcm"
+    })
+    assert(nodes.toSet == Set("md5", "nfc", "pcm"), s"analyzed plan: $nodes")
+    // 48 bytes of 0x01: two samples of 0x0101 past the 44-byte header
+    val (_, n, p) = df.as[(Long, String, Seq[Int])].head()
+    assert(n == "caf\u00e9" && p == Seq(257, 257))
+  }
+
   test("QDigestAgg: rank error within log2(U)/sigma under random partitioning and merge order") {
     val sigma = 50
     val logU = 10 // tight sigma + small universe forces real compression

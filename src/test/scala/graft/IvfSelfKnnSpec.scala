@@ -109,7 +109,7 @@ class IvfSelfKnnSpec extends AnyFunSuite {
         "neighbor_id", "cvec", nlist = 16, dim = dim, seed = 42L, iters = 2)))
       .as[(Long, Long, Int)].collect().toSet
     val exact = Similarity.cosineTopK(norm, "vec_id", "embedding", norm,
-        k = 3, dim = dim, preNormalized = true)
+        k = 3, preNormalized = true)
       .as[(Long, Long, Int)].collect().toSet
     assert(ivf == exact)
   }
